@@ -94,7 +94,9 @@ object SalesPipeline {
       require(new java.io.File(input).exists(), s"input not found: $input")
       // O2: the ETL job.
       val (nClean, nErr) = graft.etl.SalesEtl.runPipeline(spark, input, outDir)
-      val clean = spark.read.parquet(s"$outDir/clean")
+      // read with the schema the ETL wrote: no schema-inference job
+      val clean = spark.read.schema(graft.etl.SalesEtl.cleanSchema)
+        .parquet(s"$outDir/clean")
       // O3: quality gate — abort on failure like BigQueryCheckOperator.
       require(SalesQueries.validateQuality(clean).count() == 1,
         "data quality check failed")

@@ -12,7 +12,10 @@ import org.apache.spark.sql.types._
   * here the whole validate/clean/derive chain is pure Column expressions,
   * so Tungsten whole-stage codegen applies and the only shuffle is the
   * global first-wins dedup window (an upgrade over the reference's
-  * per-worker-bundle dedup, dataflow_transform.py:67-69).
+  * per-worker-bundle dedup, dataflow_transform.py:67-69). Every line is
+  * validated once into one frame that both outputs are split from; the
+  * pipelines persist that frame, so writing the clean and dead-letter
+  * sinks scans and parses the input once and runs the window once.
   *
   * Faithful semantics preserved (SURVEY.md §2 D2–D12):
   *   - naive comma split, NOT quote-aware (dataflow_transform.py:53) —
@@ -73,22 +76,18 @@ object SalesEtl {
       try_to_timestamp(c, lit("yyyy/MM/dd"))
     ).cast(DateType)
 
-  /** Parse + validate raw CSV text lines.
-    *
-    * @param lines DataFrame with a single string column `value` (one CSV
-    *              line per row, header included), as from spark.read.text.
-    * @return (clean, errors): clean rows with the 6-column output schema,
-    *         error rows as (error, row).
+  /** Every body line once, validated: `error` (null when the row is
+    * clean), the raw line `value`, the line-order proxy `_lineno` and the
+    * six clean output columns.
     *
     * Scale note: `monotonically_increasing_id` encodes (partitionId,
     * offset) and file splits are assigned in order, so it is a valid
     * global line-order proxy for first-wins dedup without collapsing to
-    * one partition. The dedup window is the single shuffle; at 100 TB it
-    * shuffles only rows that survived the cheap narrow predicates, and
-    * AQE handles id skew.
+    * one partition. The dedup window is the single shuffle: one hash
+    * exchange on (id, early-error flag) after a narrow scan and parse per
+    * split; AQE handles id skew.
     */
-  def parseAndValidate(lines: DataFrame,
-                       quoteAware: Boolean = false): (DataFrame, DataFrame) = {
+  private def validate(lines: DataFrame, quoteAware: Boolean): DataFrame = {
     // D2: header skip (dataflow_transform.py:49-50)
     val body = lines
       .withColumn("_lineno", monotonically_increasing_id())
@@ -110,35 +109,26 @@ object SalesEtl {
 
     val withParts = body
       .withColumn("parts", parts)
-      // D5: arity check; extra trailing columns tolerated (parts[:5]).
-      .withColumn("err_arity",
-        when(size(col("parts")) < 5, lit(Err.Malformed)))
       .withColumn("id_raw", get(col("parts"), lit(0)))
       .withColumn("product_raw", get(col("parts"), lit(1)))
       .withColumn("price_raw", get(col("parts"), lit(2)))
       .withColumn("quantity_raw", get(col("parts"), lit(3)))
       .withColumn("date_raw", get(col("parts"), lit(4)))
+      // D5: arity check; extra trailing columns tolerated (parts[:5]).
       // D6: required-field check (empty after trim).
-      .withColumn("err_missing",
-        when(col("err_arity").isNull &&
-          (col("id_raw") === "" || col("product_raw") === "" ||
-           col("price_raw") === "" || col("quantity_raw") === "" ||
-           col("date_raw") === ""), lit(Err.Missing)))
-
-    // Rows failing arity/missing checks return BEFORE the reference
-    // claims the id (dataflow_transform.py:54-65 return before :74), so
-    // they must not participate in dedup.
-    val earlyErrors = withParts
-      .filter(col("err_arity").isNotNull || col("err_missing").isNotNull)
-      .select(coalesce(col("err_arity"), col("err_missing")).as("error"),
-              col("value").as("row"), col("_lineno"))
+      .withColumn("err_early",
+        when(size(col("parts")) < 5, lit(Err.Malformed))
+        .when(col("id_raw") === "" || col("product_raw") === "" ||
+              col("price_raw") === "" || col("quantity_raw") === "" ||
+              col("date_raw") === "", lit(Err.Missing)))
 
     // D7: first-wins claim; the id is claimed even if the row later
     // fails type/date/product checks (dataflow_transform.py:71-84).
-    val wId = Window.partitionBy(col("id_raw")).orderBy(col("_lineno"))
-    val claimed = withParts
-      .filter(col("err_arity").isNull && col("err_missing").isNull)
-      .withColumn("_rn", row_number().over(wId))
+    // Rows failing arity/missing checks return BEFORE the reference
+    // claims the id (dataflow_transform.py:54-65 return before :74), so
+    // they rank in a window partition of their own and never claim one.
+    val wId = Window.partitionBy(col("id_raw"), col("err_early").isNull)
+      .orderBy(col("_lineno"))
 
     // D8–D11: remaining validations, in the DoFn's early-return order.
     val price = tryCast(col("price_raw"), DoubleType)
@@ -148,38 +138,63 @@ object SalesEtl {
     val saleDate = parseDate(col("date_raw"))
     val cleanProduct = translate(col("product_raw"), "\"'", "")
 
-    val validated = claimed
+    withParts
+      .withColumn("_rn", row_number().over(wId))
       .withColumn("price", price)
       .withColumn("quantity", quantity)
       .withColumn("sale_date", saleDate)
       .withColumn("product", cleanProduct)
-      .withColumn("error",
+      .withColumn("error", coalesce(col("err_early"),
         when(col("_rn") > 1, lit(Err.Duplicate))
         .when(col("price").isNull || col("quantity").isNull, lit(Err.BadType))
         .when(col("price") <= 0 || col("quantity") <= 0, lit(Err.NonPositive))
         .when(col("sale_date").isNull, lit(Err.BadDate))
         .when(col("product") === "", lit(Err.BadProduct))
-        .when(!col("id_raw").rlike("^[0-9]+$"), lit(Err.BadId)))
-
-    val lateErrors = validated
-      .filter(col("error").isNotNull)
-      .select(col("error"), col("value").as("row"), col("_lineno"))
-
-    // D12: derived column total_sale = price * quantity.
-    val clean = validated
-      .filter(col("error").isNull)
+        .when(!col("id_raw").rlike("^[0-9]+$"), lit(Err.BadId))))
       .select(
+        col("error"),
+        col("value"),
+        col("_lineno"),
         col("id_raw").as("id"),
         col("product"),
         col("price"),
         col("quantity"),
         col("sale_date"),
+        // D12: derived column total_sale = price * quantity.
         (col("price") * col("quantity")).as("total_sale"))
+  }
 
-    val errors = earlyErrors.unionAll(lateErrors)
-      .orderBy(col("_lineno")).select(col("error"), col("row"))
-
+  /** (clean, errors) of a [[validate]] frame: clean rows with the
+    * 6-column output schema, error rows as (error, row) in line order. */
+  private def splitValidated(rows: DataFrame): (DataFrame, DataFrame) = {
+    val clean = rows.filter(col("error").isNull)
+      .select(cleanSchema.fieldNames.map(col).toSeq: _*)
+    val errors = rows.filter(col("error").isNotNull)
+      .orderBy(col("_lineno")).select(col("error"), col("value").as("row"))
     (clean, errors)
+  }
+
+  /** Parse + validate raw CSV text lines.
+    *
+    * @param lines DataFrame with a single string column `value` (one CSV
+    *              line per row, header included), as from spark.read.text.
+    * @return (clean, errors): clean rows with the 6-column output schema,
+    *         error rows as (error, row).
+    */
+  def parseAndValidate(lines: DataFrame,
+                       quoteAware: Boolean = false): (DataFrame, DataFrame) =
+    splitValidated(validate(lines, quoteAware))
+
+  /** Runs `f` on the (clean, errors) pair of ONE persisted validated
+    * frame, so writing both sinks scans, parses and shuffles the input
+    * once; the frame is unpersisted when `f` returns or throws. */
+  private[etl] def withValidated[T](lines: DataFrame, quoteAware: Boolean)(
+      f: (DataFrame, DataFrame) => T): T = {
+    val rows = validate(lines, quoteAware).persist()
+    try {
+      val (clean, errors) = splitValidated(rows)
+      f(clean, errors)
+    } finally rows.unpersist()
   }
 
   /** Sink seam for cloud deployment: the pipeline writes through a
@@ -196,21 +211,26 @@ object SalesEtl {
                         options: Map[String, String] = Map.empty)
 
   /** E1 pipeline: read text CSV → validate → write clean + dead-letter
-    * datasets through the [[Sink]] seam (SaveMode.Overwrite ≡
-    * WRITE_TRUNCATE, dataflow_transform.py:157; the dead-letter
-    * dataset upgrades the reference's log-only errors,
-    * dataflow_transform.py:163-168). `outDir` is any Hadoop-FS URI —
-    * local path here, `gs://`/`s3a://` on a real cluster. */
+    * datasets from one persisted validated frame through the [[Sink]]
+    * seam (SaveMode.Overwrite ≡ WRITE_TRUNCATE,
+    * dataflow_transform.py:157; the dead-letter dataset upgrades the
+    * reference's log-only errors, dataflow_transform.py:163-168).
+    * `outDir` is any Hadoop-FS URI — local path here, `gs://`/`s3a://`
+    * on a real cluster. The clean dataset keeps the dedup window's
+    * partitioning (`spark.sql.shuffle.partitions` files): AQE does not
+    * coalesce the output of a cached plan. */
   def runPipeline(spark: SparkSession, input: String, outDir: String,
                   quoteAware: Boolean = false,
                   sink: Sink = Sink()): (Long, Long) = {
-    val lines = spark.read.text(input)
-    val (clean, errors) = parseAndValidate(lines, quoteAware)
-    def write(df: org.apache.spark.sql.DataFrame, part: String): Unit =
+    def write(df: DataFrame, part: String): Unit =
       df.write.mode("overwrite").format(sink.format)
         .options(sink.options).save(s"$outDir/$part")
-    write(clean, "clean")
-    write(errors, "errors")
+    val (cleanWritten, errorsWritten) =
+      withValidated(spark.read.text(input), quoteAware) { (clean, errors) =>
+        write(clean, "clean")
+        write(errors, "errors")
+        (clean.schema, errors.schema)
+      }
     // csv round-trip fidelity: a dead-letter `raw_line` can carry an
     // embedded newline, which the csv writer quotes correctly but the
     // default (line-splitting) csv reader would split into two rows,
@@ -219,10 +239,9 @@ object SalesEtl {
     val readOpts =
       if (sink.format == "csv") sink.options + ("multiLine" -> "true")
       else sink.options
-    def read(part: String) =
-      spark.read.format(sink.format).options(readOpts)
-        .schema(if (part == "clean") clean.schema else errors.schema)
+    def read(part: String, schema: StructType) =
+      spark.read.format(sink.format).options(readOpts).schema(schema)
         .load(s"$outDir/$part")
-    (read("clean").count(), read("errors").count())
+    (read("clean", cleanWritten).count(), read("errors", errorsWritten).count())
   }
 }

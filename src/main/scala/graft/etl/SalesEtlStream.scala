@@ -8,8 +8,9 @@ import org.apache.spark.sql.streaming.Trigger
   * a file-source stream — "process whatever CSV files have arrived,
   * then stop" with `Trigger.AvailableNow`, re-run per schedule.
   *
-  * Each micro-batch is pushed through the SAME batch
-  * [[SalesEtl.parseAndValidate]] chain via `foreachBatch` — and the
+  * Each micro-batch is pushed through the SAME batch validate chain as
+  * [[SalesEtl.runPipeline]] via `foreachBatch` (one persisted validated
+  * frame per batch feeds both appends) — and the
   * first-wins id dedup therefore claims ids WITHIN one micro-batch,
   * which is precisely the reference's per-worker-bundle dedup semantics
   * (dataflow_transform.py:44-45,67-69: a new bundle forgets previously
@@ -35,10 +36,10 @@ object SalesEtlStream {
     val lines = reader.text(inputDir)
     val q = lines.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (clean, errors) = SalesEtl.parseAndValidate(batch, quoteAware)
-        clean.write.mode("append").parquet(s"$outDir/clean")
-        errors.write.mode("append").parquet(s"$outDir/errors")
-        ()
+        SalesEtl.withValidated(batch, quoteAware) { (clean, errors) =>
+          clean.write.mode("append").parquet(s"$outDir/clean")
+          errors.write.mode("append").parquet(s"$outDir/errors")
+        }
       }
       .option("checkpointLocation", s"$outDir/_checkpoint")
       .trigger(Trigger.AvailableNow())

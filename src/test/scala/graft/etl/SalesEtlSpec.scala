@@ -80,6 +80,49 @@ class SalesEtlSpec extends AnyFunSuite {
     val msgs = e.collect().map(_.getString(0)).toSeq
     assert(msgs === Seq(SalesEtl.Err.BadDate, SalesEtl.Err.Duplicate))
   }
+
+  // Early (arity/missing) errors share the dedup window with the rest but
+  // rank apart, so they never claim an id (dataflow_transform.py:54-74).
+  private def validateLines(body: String*): (Seq[String], Seq[(String, String)]) = {
+    import spark.implicits._
+    val (c, e) = SalesEtl.parseAndValidate(
+      ("id,product,price,quantity,sale_date" +: body).toDF("value"))
+    (c.collect().map(_.getString(0)).toSeq,
+     e.collect().map(r => (r.getString(0), r.getString(1))).toSeq)
+  }
+
+  test("a missing-field row does not claim its id from a later valid row") {
+    val (c, e) = validateLines("60,Widget,,1,2024-01-01", "60,Widget,10.0,1,2024-01-01")
+    assert(c === Seq("60"))
+    assert(e === Seq((SalesEtl.Err.Missing, "60,Widget,,1,2024-01-01")))
+  }
+
+  test("a malformed row after a valid row with its id is Malformed, not Duplicate") {
+    val (c, e) = validateLines("61,Widget,10.0,1,2024-01-01", "61,Widget")
+    assert(c === Seq("61"))
+    assert(e === Seq((SalesEtl.Err.Malformed, "61,Widget")))
+  }
+
+  test("dead letters come out in line order across early and late errors") {
+    val (c, e) = validateLines(
+      "70,Widget,10.0,1,2024-01-01",
+      "71,Widget",
+      "70,Widget,10.0,1,2024-01-02",
+      "72,Widget,abc,1,2024-01-01",
+      "73,,10.0,1,2024-01-01",
+      "74,Widget,10.0,1,2024-13-01",
+      "75,Widget,10.0",
+      "75,Widget,10.0,0,2024-01-01")
+    assert(c === Seq("70"))
+    assert(e === Seq(
+      (SalesEtl.Err.Malformed, "71,Widget"),
+      (SalesEtl.Err.Duplicate, "70,Widget,10.0,1,2024-01-02"),
+      (SalesEtl.Err.BadType, "72,Widget,abc,1,2024-01-01"),
+      (SalesEtl.Err.Missing, "73,,10.0,1,2024-01-01"),
+      (SalesEtl.Err.BadDate, "74,Widget,10.0,1,2024-13-01"),
+      (SalesEtl.Err.Malformed, "75,Widget,10.0"),
+      (SalesEtl.Err.NonPositive, "75,Widget,10.0,0,2024-01-01")))
+  }
 }
 
 /** The documented quote-aware deviation (SURVEY.md §7): same pipeline,
@@ -131,5 +174,74 @@ class SalesEtlSinkSeamSpec extends org.scalatest.funsuite.AnyFunSuite {
     val (nClean, nErr) = SalesEtl.runPipeline(spark, path, out.toString,
       sink = SalesEtl.Sink("csv", Map("header" -> "true")))
     assert((nClean, nErr) === ((12L, 14L)))
+  }
+}
+
+/** `runPipeline` builds the validated rows once and writes both sinks
+  * from one persisted copy: the CSV is scanned once, the dedup exchange
+  * runs once, and the copy is released whether or not the sinks succeed. */
+class SalesEtlSharedFrameSpec extends org.scalatest.funsuite.AnyFunSuite {
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+
+  private lazy val spark = SparkTestSession.get
+  private def fixture = getClass.getResource("/messy_sales_data.csv").getPath
+
+  private def cacheEntries: (Int, Int) =
+    (spark.sparkContext.getPersistentRDDs.size,
+     org.apache.spark.sql.SparkTestInternals.numCachedEntries(spark))
+
+  /** Stages completed while `f` ran. */
+  private def stagesOf(f: => Unit): Seq[StageInfo] = {
+    val sc = spark.sparkContext
+    val seen = scala.collection.mutable.ArrayBuffer[StageInfo]()
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        seen.synchronized { seen += e.stageInfo }
+    }
+    org.apache.spark.sql.SparkTestInternals.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try f
+    finally {
+      org.apache.spark.sql.SparkTestInternals.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    seen.synchronized(seen.toList)
+  }
+
+  private def has(s: StageInfo, scope: String => Boolean) =
+    s.rddInfos.exists(_.scope.exists(sc => scope(sc.name)))
+
+  test("one stage scans the CSV and one writes the dedup shuffle; the cache is released") {
+    val out = java.nio.file.Files.createTempDirectory("etl_one_scan")
+    graft.sources.TempDirs.deleteOnExit(out)
+    val before = cacheEntries
+    var counts = (0L, 0L)
+    val stages = stagesOf {
+      counts = SalesEtl.runPipeline(spark, fixture, out.toString)
+    }
+    assert(counts === ((12L, 14L)))
+    def scansCsv(s: StageInfo) = has(s, _.startsWith("Scan text"))
+    assert(stages.count(scansCsv) === 1,
+      s"stages scanning the CSV: ${stages.filter(scansCsv).map(_.stageId)}")
+    // the dedup exchange's map side: a shuffle of parsed lines, written
+    // upstream of the Window that ranks them
+    val dedupWrites = stages.filter(s => scansCsv(s) && !has(s, _ == "Window") &&
+      s.taskMetrics.shuffleWriteMetrics.bytesWritten > 0)
+    assert(dedupWrites.size === 1)
+    assert(cacheEntries === before)
+  }
+
+  test("a failing sink write still releases the cached copy") {
+    val out = java.nio.file.Files.createTempDirectory("etl_bad_sink")
+    graft.sources.TempDirs.deleteOnExit(out)
+    // a copy of its own, so no other spec's cache entry matches its plan
+    val input = out.resolve("sales.csv")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(fixture), input)
+    val before = cacheEntries
+    intercept[Exception] {
+      SalesEtl.runPipeline(spark, input.toString, s"$out/out",
+        sink = SalesEtl.Sink("no_such_format"))
+    }
+    assert(cacheEntries === before)
   }
 }
