@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.plans.Barrier
 
 /** Bench harness: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
@@ -75,13 +76,6 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Drop per-query state (caches AND the lineage-truncation
-    // localCheckpoint blocks, which clearCache does not touch) so
-    // queries don't fight for storage within the JVM.
-    def reset(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     val timeoutSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_TIMEOUT_SEC", "120").toInt.max(1)
     // Machine-checkable quietness (r11 verdict ask #7): "quiet" was a
@@ -97,14 +91,14 @@ object Bench {
     def run1(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Either[String, Double] = {
       val r = runWithWatchdog(spark, name, timeoutSec) { fn(spark, sfDir).count(); () }
-      reset()
+      Barrier.releaseAll(spark)
       r
     }
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     if (passes > 1) // untimed warm-up pass over the whole suite (also watchdog-bounded)
       ordered.foreach { case (name, fn) =>
         runWithWatchdog(spark, s"warmup-$name", timeoutSec) { fn(spark, sfDir).count(); () }
-        reset()
+        Barrier.releaseAll(spark)
       }
     val runs: Seq[Seq[(String, Either[String, Double])]] =
       (1 to passes).map(_ => ordered.map { case (name, fn) => name -> run1(name, fn) })
@@ -188,7 +182,7 @@ object Bench {
         case Left(msg) => errors(s"streaming:$name") = msg
         case Right(_)  => ()
       }
-      reset()
+      Barrier.releaseAll(spark)
       line
     }.mkString("{", ",", "}")
     val es2 = errors.map { case (k, v) => s"\"${esc(k)}\":\"${esc(v)}\"" }

@@ -6,12 +6,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional third arg: comma-separated name prefixes — dev-loop
-    // filter to re-verify a few queries without the full suite. The
-    // driver always calls with two args (full run).
+    // Optional third arg: comma-separated query names or numbers (`q12`)
+    // — a dev-loop filter; without it every query runs.
     val keep: String => Boolean = args.lift(2) match {
       case Some(p) =>
-        val ps = p.split(',').toSeq; n => ps.exists(n.startsWith)
+        val ps = p.split(',').toSeq; n => ps.exists(graft.tools.DevArgs.selects(_, n))
       case None => _ => true
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -21,14 +20,11 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     // Dev-loop conf overrides, e.g. the scale protocol's
-    // SPARK_GRAFT_CONF="graft.dedup.materializeMode=reliable;
+    // SPARK_GRAFT_CONF="graft.materialize=reliable;
     // spark.executor.heartbeatInterval=60s". Applied on the BUILDER so
-    // context-init confs (heartbeats, network timeouts) take effect
-    // too. The driver never sets this, so gate runs are unaffected.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    })
+    // context-init confs (heartbeats, network timeouts) take effect too.
+    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.trim.nonEmpty)
+      .map(graft.tools.DevArgs.conf).foreach { case (k, v) => builder.config(k, v) })
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.setCheckpointDir(
@@ -40,7 +36,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.sharedState.cacheManager.clearCache()
+      graft.plans.Barrier.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
+import graft.plans.Barrier
 
 /** Distribution-drift monitor (q197) — the ingest-gate check a
   * training-data pipeline runs between corpus snapshots before letting
@@ -142,7 +143,7 @@ object DriftOps {
     val cnt = Tables.spread(Tables.documents(spark, dir))
       .select(col("source"), explode(tokensCol(lower(col("text")))).as("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     lexicalDriftOfCounts(cnt)
   }
 
@@ -158,7 +159,7 @@ object DriftOps {
     val n = rc.groupBy(col("source")).agg(sum(col("c")).as("n_src"))
     val p = rc.join(broadcast(n), "source")
       .select(col("source"), col("tok"), expr("c * 1000000 div n_src").as("p"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val t = p.groupBy(col("source"))
       .agg(sum(col("p")).as("tp"), count(lit(1)).as("n_toks"))
     val common = p.as("a").join(p.as("b"),

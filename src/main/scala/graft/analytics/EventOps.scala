@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
+import graft.plans.Barrier
 
 /** Event-stream operators over the `events` table (SURVEY.md §7
   * extensions; batch forms here so the DuckDB oracle can verify —
@@ -1459,14 +1460,14 @@ object EventOps {
       .select(col("user_id"), col("ts"), col("event_type"))
     val fv = ev.filter(col("event_type") === "view")
       .groupBy(col("user_id")).agg(min(col("ts")).as("vts"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val nTotal = fv.count()
     val maxDay = ev.agg(max(to_date(col("ts"))).as("mx"))
     val conv = ev.join(fv, "user_id")
       .filter(col("event_type") =!= "view" && col("ts") > col("vts"))
       .groupBy(col("user_id"), col("event_type").as("target"))
       .agg(min(datediff(to_date(col("ts")), to_date(col("vts")))).cast("long").as("dur"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val targets = conv.select(col("target")).distinct()
     val dCells = conv.groupBy(col("target"), col("dur").as("day"))
       .agg(count(lit(1)).as("d"))
@@ -1583,7 +1584,7 @@ object EventOps {
       .filter(col("from_type").isNotNull)
       .groupBy(col("from_type"), col("event_type").as("to_type"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     absorbProbOfCounts(counts)
   }
 
@@ -1593,7 +1594,7 @@ object EventOps {
     val out = counts.groupBy(col("from_type")).agg(sum(col("n")).as("out_n"))
     val types = counts.select(col("from_type").as("t"))
       .unionAll(counts.select(col("to_type").as("t"))).distinct()
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     var state = types.select(col("t"),
       when(col("t") === AbsorbTarget, lit(1000000L)).otherwise(lit(0L)).as("p"))
     for (_ <- 1 to AbsorbRounds) {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
+import graft.plans.Barrier
 
 /** Relational operator surface (SURVEY.md §2b, R1–R13) expressed over the
   * driver's TPC-H-ish tables so the DuckDB oracle can verify each one.
@@ -268,7 +269,7 @@ object Relational {
     * partition. */
   def theilSenTrend(spark: SparkSession, dir: String): DataFrame = {
     val monthly = monthlyRevenue(spark, dir)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val a = monthly.select(col("n_name"), col("m").as("m1"), col("y").as("y1"))
     val b = monthly.select(col("n_name"), col("m").as("m2"), col("y").as("y2"))
     val slopes = a.join(b, Seq("n_name")).filter(col("m1") < col("m2"))
@@ -339,7 +340,7 @@ object Relational {
     * the ledger is one narrow map over the cell table. */
   def trendInfluence(spark: SparkSession, dir: String): DataFrame =
     trendInfluenceOf(monthlyRevenue(spark, dir)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+      .transform(Barrier.eager(_)))
 
   /** The jackknife core on an explicit (n_name, m, y) cell table —
     * exposed for closed-form fixture specs. */
@@ -1182,7 +1183,7 @@ object Relational {
     * rows — exposed for hand-computed fixture specs. */
   def assocRulesOfBaskets(baskets: DataFrame): DataFrame = {
     val li = baskets.distinct()
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val nOrders = li.select(col("l_orderkey")).distinct().count()
     val item = li.groupBy(col("l_partkey")).agg(count(lit(1)).as("n_item"))
     // li is already distinct AND checkpointed: the self-join form reuses
@@ -1273,7 +1274,7 @@ object Relational {
       .crossJoin(broadcast(mx))
       .select(col("o_custkey"), datediff(col("mxd"), col("lastd")).cast("long").as("rec"),
         col("freq"), col("mon_c"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     def cuts(c: String) = Seq(0.2, 0.4, 0.6, 0.8).zipWithIndex.map { case (f, i) =>
       expr(s"percentile_disc($f) WITHIN GROUP (ORDER BY $c)").as(s"${c}_$i")
     }

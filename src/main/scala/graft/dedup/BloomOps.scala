@@ -57,7 +57,7 @@ object BloomOps {
     }.reduce(_ && _)
 
   def bloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val hsets = DedupOps.materialize(DedupOps.shingleHashes(spark, dir))
+    val hsets = graft.plans.Barrier.eager(DedupOps.shingleHashes(spark, dir))
     val evalH = hsets.filter(col("doc_id") < DedupOps.EvalDocMax)
       .select(explode(col("hs")).as("h")).distinct()
     val bloom = evalH.agg(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
 import graft.functions.TextExprs._
+import graft.plans.Barrier
 
 /** Document deduplication operators over the `documents` table — the
   * dedup half of the training-data-pipeline surface (builder brief:
@@ -27,32 +28,6 @@ import graft.functions.TextExprs._
   *    signature computation itself.
   */
 object DedupOps {
-
-  /** Eager lineage-truncating materialization used between the stages of
-    * the multi-self-join dedup pipelines (band index, candidate set):
-    * each stage is small (O(docs·Bands) fixed-width rows) and truncating
-    * lineage keeps the self-join + verify joins from replanning or
-    * recomputing the upstream tokenize→hash pipeline (cache substitution
-    * on self-joined subtrees proved unreliable).
-    *
-    * The default `localCheckpoint` is NOT fault-tolerant: it pins the
-    * materialized blocks to executors, so losing an executor kills the
-    * job instead of recomputing. Right trade for the single-JVM bench.
-    * On a real cluster either set `graft.dedup.eagerMaterialize=false`
-    * (lineage stands; stages recompute upstream on loss) or
-    * `graft.dedup.materializeMode=reliable` (Dataset.checkpoint to the
-    * DFS dir from `SparkContext.setCheckpointDir` — survives executor
-    * loss at the price of a write+read round trip per barrier). All
-    * three paths are hash-equal by MaterializeModesSpec. */
-  private[dedup] def materialize(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
-    if (conf.get("graft.dedup.eagerMaterialize", "true") != "true") df
-    else conf.get("graft.dedup.materializeMode", "local") match {
-      case "reliable" => df.checkpoint(true)
-      case _ => df.localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    }
-  }
 
   // ------------------------------------------------ capped bucket pair join
 
@@ -178,7 +153,7 @@ object DedupOps {
     * `extra` carries routing columns (e.g. the ingest side flag)
     * through the index. */
   private def docBandIndex(hsets: DataFrame, extra: Seq[(String, Column)] = Nil): DataFrame =
-    materialize(hsets
+    Barrier.eager(hsets
       .select(col("doc_id") +: extra.map { case (n, c) => c.as(n) } :+
         minhashSigCol(col("hs")).as("sig"): _*)
       .withColumn("b", explode(sequence(lit(0), lit(Bands - 1))))
@@ -406,8 +381,8 @@ object DedupOps {
     * filter dropped nothing (the q145 adjudication pattern). */
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val hs = materialize(shingleHashes(spark, dir))
-    val post = materialize(hs.select(
+    val hs = Barrier.eager(shingleHashes(spark, dir))
+    val post = Barrier.eager(hs.select(
       col("doc_id"), col("n"), explode(col("hs")).as("h")))
     val dfreq = post.groupBy(col("h")).agg(count(lit(1)).as("dfreq"))
     val pref = post.join(dfreq, "h")
@@ -503,7 +478,7 @@ object DedupOps {
     minhashLshFrom(shingleHashes(spark, dir))
 
   private[graft] def minhashLshFrom(hsetsRaw: DataFrame): DataFrame = {
-    val hsets  = materialize(hsetsRaw)
+    val hsets  = Barrier.eager(hsetsRaw)
     // clean-corpus fast route: one tiny gate job (max band-bucket
     // size) decides whether the collapse + capped-grid machinery is
     // needed at all
@@ -513,9 +488,9 @@ object DedupOps {
     System.err.println(
       s"[graft.dedup] adaptive route=${if (collapsed) "hardened" else "lean"}")
     val groups =
-      if (collapsed) materialize(collapseShingleSets(hsets))
+      if (collapsed) Barrier.eager(collapseShingleSets(hsets))
       else singletonGroups(hsets)
-    val cand = clean.getOrElse(materialize(minhashRepCandidates(
+    val cand = clean.getOrElse(Barrier.eager(minhashRepCandidates(
       groups.select(col("rep"), col("hs")))))
     // tier 1: reject from the carried fixed-width signatures alone
     val borderline = cand
@@ -577,7 +552,7 @@ object DedupOps {
     * verification entirely (no shingle sets in the shuffle, just the
     * K-long signatures). All integer arithmetic — oracle-exact. */
   def minhashEstimate(spark: SparkSession, dir: String): DataFrame = {
-    val hsets  = materialize(shingleHashes(spark, dir))
+    val hsets  = Barrier.eager(shingleHashes(spark, dir))
     // same collapse + capped-bucket machinery as q21 (identical sets
     // have identical signatures AND identical exact Jaccard vs anyone,
     // so rep-level values expand to member pairs unchanged; within a
@@ -589,7 +564,7 @@ object DedupOps {
     System.err.println(
       s"[graft.dedup] adaptive route=${if (collapsed) "hardened" else "lean"}")
     val groups =
-      if (collapsed) materialize(collapseShingleSets(hsets))
+      if (collapsed) Barrier.eager(collapseShingleSets(hsets))
       else singletonGroups(hsets)
     val cand   = clean.getOrElse(
         minhashRepCandidates(groups.select(col("rep"), col("hs"))))
@@ -650,10 +625,10 @@ object DedupOps {
     * so at 100 TB the loop runs over a tiny fraction of the data. The
     * oracle computes the same components with a recursive CTE. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = materialize(minhashLsh(spark, dir).select(col("d1"), col("d2")))
-    val edges = materialize(pairs
+    val pairs = Barrier.eager(minhashLsh(spark, dir).select(col("d1"), col("d2")))
+    val edges = Barrier.eager(pairs
       .unionAll(pairs.select(col("d2").as("d1"), col("d1").as("d2"))))
-    var labels = materialize(edges.select(col("d1").as("node")).distinct()
+    var labels = Barrier.eager(edges.select(col("d1").as("node")).distinct()
       .withColumn("rep", col("node")))
     var changed = 1L
     while (changed > 0) {
@@ -671,7 +646,7 @@ object DedupOps {
       val next = labels.join(nbrMin, Seq("node"), "left")
         .select(col("node"), col("rep").as("old_rep"),
           least(col("rep"), coalesce(col("nbr_min"), col("rep"))).as("rep"))
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(Barrier.lazily(_, required = true))
       changed = next.filter(col("rep") =!= col("old_rep")).count()
       labels = next.select(col("node"), col("rep"))
     }
@@ -702,9 +677,9 @@ object DedupOps {
     * fixpoint test is EXACT and single-action: the signed-count
     * symmetric difference of the two distinct canonical sets is empty. */
   private[graft] def starComponents(pairs: DataFrame): (DataFrame, Int) = {
-    val nodes = materialize(pairs.select(col("d1").as("node"))
+    val nodes = Barrier.eager(pairs.select(col("d1").as("node"))
       .unionAll(pairs.select(col("d2").as("node"))).distinct())
-    var edges = materialize(pairs
+    var edges = Barrier.eager(pairs
       .select(least(col("d1"), col("d2")).as("a"),
         greatest(col("d1"), col("d2")).as("b"))
       .filter(col("a") =!= col("b")).distinct())
@@ -733,14 +708,6 @@ object DedupOps {
         .filter(col("a") =!= col("b")).distinct()
     }
 
-    val lazyCkpt = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    // the persisted RDD behind a localCheckpoint'd frame — so a round's
-    // dead blocks can be dropped as soon as the next round materializes
-    // (r14 advice: the loop used to persist 2 checkpoints per round for
-    // up to 64 rounds and never unpersist within the query)
-    def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
     var rounds = 0
     var converged = edges.isEmpty
     while (!converged && rounds < 64) { // log2-bounded; 64 = overflow guard
@@ -753,18 +720,18 @@ object DedupOps {
       // round reads cached blocks — the q72/nswBuild convention), and
       // it doubles as the exact symmetric-difference test: both sets
       // are distinct, so equal iff no (a, b) has a nonzero signed count.
-      val ls = largeStar(edges).localCheckpoint(false, lazyCkpt)
-      val next = smallStar(ls).localCheckpoint(false, lazyCkpt)
+      val ls = Barrier.lazily(largeStar(edges), required = true)
+      val next = Barrier.lazily(smallStar(ls), required = true)
       rounds += 1
       converged = next.select(col("a"), col("b"), lit(1L).as("side"))
         .unionAll(edges.select(col("a"), col("b"), lit(-1L).as("side")))
         .groupBy(col("a"), col("b")).agg(sum(col("side")).as("s"))
         .filter(col("s") =!= 0L).count() == 0L
-      // the count materialized `next`; the round's large-star blocks and
-      // the PREVIOUS round's edges are dead — drop them so the per-round
-      // persisted footprint stays at one edge set instead of 2·rounds
-      ckptRdd(ls).foreach(_.unpersist(blocking = false))
-      ckptRdd(edges).foreach(_.unpersist(blocking = false))
+      // the count read every partition of `next` (and so of `ls`): the
+      // round's large-star blocks and the PREVIOUS round's edges are dead
+      // — drop them so the footprint stays one edge set, not 2·rounds
+      Barrier.release(ls)
+      Barrier.release(edges)
       edges = next
     }
     val map = nodes
@@ -1068,8 +1035,8 @@ object DedupOps {
     * floods (exact/near-exact dups) never enter the join at all. */
   private[graft] def simhashNearDupFrom(sigsRaw: DataFrame,
                                         maxHd: Int = HammingMax): DataFrame = {
-    val sigs   = materialize(sigsRaw)
-    val groups = materialize(sigs.groupBy(col("sig"))
+    val sigs   = Barrier.eager(sigsRaw)
+    val groups = Barrier.eager(sigs.groupBy(col("sig"))
       .agg(min(col("doc_id")).as("rep"),
         sort_array(collect_list(col("doc_id"))).as("members"),
         count(lit(1)).cast("int").as("gsize")))
@@ -1282,8 +1249,8 @@ object DedupOps {
     * the from-hsets seam the crafted-corpus specs drive directly. */
   private[graft] def containmentFrom(hsets: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val hs = materialize(hsets)
-    val post = materialize(hs.select(
+    val hs = Barrier.eager(hsets)
+    val post = Barrier.eager(hs.select(
       col("doc_id"), col("n"), explode(col("hs")).as("h")))
     val dfreq = post.groupBy(col("h")).agg(count(lit(1)).as("dfreq"))
     val probes = post.join(dfreq, "h")
@@ -1454,7 +1421,7 @@ object DedupOps {
       .shingleHashes(tokensCol(col("text")), ShingleW, P)
     val sig = graft.functions.NativeExprs.simHash(
       graft.functions.NativeExprs.tokenHashes(tokensCol(col("text"))), SimhashBits)
-    val docs = materialize(
+    val docs = Barrier.eager(
           // spread: no-op on a multi-split deployment, parallelizes the 1-split testdata
       Tables.spread(Tables.documents(spark, dir))
         .select(col("doc_id"), hs.as("hs"), sig.as("sig")))
@@ -1509,7 +1476,7 @@ object DedupOps {
     * the corpus side is a stored index keyed by (band, key): per-run
     * shuffle volume is O(batch × Bands), independent of corpus size. */
   def ingestDedup(spark: SparkSession, dir: String): DataFrame = {
-    val hsets = materialize(shingleHashes(spark, dir))
+    val hsets = Barrier.eager(shingleHashes(spark, dir))
     val isNew = col("doc_id") % IngestMod === IngestMod - 1
     // Same hardening as q21, adapted to the probe-an-index shape — all
     // exact, oracle unchanged: collapse identical sets on EACH side of
@@ -1530,10 +1497,10 @@ object DedupOps {
     val clean = cleanProbeCandidates(hsets, isNew)
     val collapsed = clean.isEmpty
     val gNew  =
-      if (collapsed) materialize(collapseShingleSets(hsets.filter(isNew)))
+      if (collapsed) Barrier.eager(collapseShingleSets(hsets.filter(isNew)))
       else singletonGroups(hsets.filter(isNew))
     val gCorp =
-      if (collapsed) materialize(collapseShingleSets(hsets.filter(!isNew)))
+      if (collapsed) Barrier.eager(collapseShingleSets(hsets.filter(!isNew)))
       else singletonGroups(hsets.filter(!isNew))
     def bands(g: DataFrame, id: String, sig: String) = g
       .select(col("rep"), minhashSigCol(col("hs")).as(sig))

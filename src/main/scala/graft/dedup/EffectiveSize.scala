@@ -23,7 +23,7 @@ import graft.tables.Tables
 object EffectiveSize {
 
   def effectiveSize(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = DedupOps.materialize(
+    val pairs = graft.plans.Barrier.eager(
       DedupOps.minhashLsh(spark, dir).select(col("d1"), col("d2")))
     val clusters = DedupOps.starComponents(pairs)._1
     val docs = Tables.spread(Tables.documents(spark, dir))

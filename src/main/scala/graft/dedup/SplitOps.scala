@@ -28,7 +28,7 @@ import graft.functions.TextExprs._
 object SplitOps {
 
   def clusterSplit(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = DedupOps.materialize(
+    val pairs = graft.plans.Barrier.eager(
       DedupOps.minhashLsh(spark, dir).select(col("d1"), col("d2")))
     val clusters = DedupOps.starComponents(pairs)._1
     val docs = Tables.spread(Tables.documents(spark, dir)).select(col("doc_id"))

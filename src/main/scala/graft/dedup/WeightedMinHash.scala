@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
 import graft.functions.TextExprs._
+import graft.plans.Barrier
 
 /** IDF-weighted near-dup detection (q184) — the weighting q21's plain
   * Jaccard lacks: two documents sharing RARE shingles are far more
@@ -41,7 +42,7 @@ object WeightedMinHash {
   val JwCutBp = 5000L
 
   def weightedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val hsets = DedupOps.materialize(DedupOps.shingleHashes(spark, dir))
+    val hsets = Barrier.eager(DedupOps.shingleHashes(spark, dir))
     val ex = hsets.select(col("doc_id"), explode(col("hs")).as("h"))
     val nDocs = hsets.agg(count(lit(1)).as("nd"))
     val wts = ex.groupBy("h").agg(count(lit(1)).as("df"))
@@ -49,7 +50,7 @@ object WeightedMinHash {
       .withColumn("w", lit(1L)
         + when(col("df") * 64 <= col("nd"), 1L).otherwise(0L)
         + when(col("df") * 256 <= col("nd"), 1L).otherwise(0L))
-    val rsets = DedupOps.materialize(ex.join(wts.select("h", "w"), "h")
+    val rsets = Barrier.eager(ex.join(wts.select("h", "w"), "h")
       .select(col("doc_id"), col("h"),
         explode(sequence(lit(0L), col("w") - 1)).as("r"))
       .withColumn("hr", (col("h") * 31 + col("r")) % P)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
+import graft.plans.Barrier
 
 /** Distributed graph analytics over the co-purchase graph (parts linked
   * by appearing in the same order — the item-item graph q120 mines).
@@ -25,29 +26,6 @@ object GraphOps {
 
   /** Seed catalog for the BFS: one brand's parts. */
   val BfsSeedBrand = "Brand#1"
-
-  /** Eager lineage truncation for the edge list / oriented edge list —
-    * both are referenced by several joins of the same plan, and without
-    * truncation each reference re-derives the lineitem self-join (the
-    * same cache-substitution-on-self-join caveat as DedupOps). Same
-    * trade-off as `DedupOps.materialize`: NOT fault-tolerant; on a real
-    * cluster set `graft.graph.eagerMaterialize=false` and let lineage
-    * stand or use reliable `checkpoint()`. */
-  private def materialize(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("graft.graph.eagerMaterialize", "true") == "true")
-      df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    else df
-
-  /** LAZY lineage truncation (r15, the q134 convention): same plan
-    * truncation as [[materialize]] — the multi-referenced frame becomes
-    * a LogicalRDD, so the plan cannot double per reference — but WITHOUT
-    * its own materializing job: the first downstream action (typically
-    * the renorm's 1-row max broadcast) computes and persists the blocks,
-    * and every later reference reads them. Used where no driver-side
-    * scalar needs the frame eagerly; shaves one job barrier per call in
-    * the round-latency-bound iterative operators (q224). */
-  private def materializeLazy(df: DataFrame): DataFrame =
-    df.localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Broadcast hint behind a config seam. The co-purchase edge list is
     * catalog-sized (parts², bounded by basket overlap — ~1.2M rows /
@@ -108,7 +86,7 @@ object GraphOps {
     * is one (node, hop) row per *visited* node: fixed-width, linear in
     * nodes, never in edges. */
   def graphBfs(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = materialize(edges(spark, dir, minSupport = 2))
+    val e0 = Barrier.eager(edges(spark, dir, minSupport = 2))
     // symmetric view: undirected traversal
     val e = e0.select(col("pa").as("u"), col("pb").as("v"))
       .unionAll(e0.select(col("pb").as("u"), col("pa").as("v")))
@@ -152,7 +130,7 @@ object GraphOps {
     * round) — but a graph of diameter > K silently under-labels there.
     * This variant trades per-round driver convergence checks (one tiny
     * job each: is the materialized frontier empty?) for exactness at
-    * any diameter, and truncates lineage EVERY round via [[materialize]]
+    * any diameter, and truncates lineage EVERY round through a `Barrier`
     * — state stays one fixed-width (node, hop) row per visited node,
     * and the plan per round is one join + one min-fold regardless of
     * how many rounds have run (the unrolled form's plan grows linearly
@@ -164,14 +142,14 @@ object GraphOps {
     * on the empty frontier in diameter-many rounds. */
   def bfsFixpoint(e: DataFrame, seeds: DataFrame, maxRounds: Int = 256): DataFrame = {
     val be = maybeBroadcast(e)
-    var visited = materialize(seeds.select(col("n"), col("hop")))
+    var visited = Barrier.eager(seeds.select(col("n"), col("hop")))
     var frontier = visited.filter(col("hop") === 0L)
     var round = 1
     while (round <= maxRounds && !frontier.isEmpty) {
       val expanded = frontier.join(be, frontier("n") === be("u"))
         .select(col("v").as("n"), lit(round.toLong).as("hop"))
-      visited = materialize(visited.unionAll(expanded)
-        .groupBy(col("n")).agg(min(col("hop")).as("hop")))
+      visited = Barrier.eager(visited.unionAll(expanded)
+        .groupBy(col("n")).agg(min(col("hop")).as("hop")), required = true)
       // newly-discovered nodes only: re-reached nodes kept their
       // smaller hop in the min-fold, so hop == round ⟺ first visit
       frontier = visited.filter(col("hop") === round.toLong)
@@ -184,7 +162,7 @@ object GraphOps {
     * part reachable from the seed brand gets its true min hop count.
     * Same edge semantics as q122 (support ≥ 2, undirected). */
   def graphBfsConverged(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = materialize(edges(spark, dir, minSupport = 2))
+    val e0 = Barrier.eager(edges(spark, dir, minSupport = 2))
     val e = e0.select(col("pa").as("u"), col("pb").as("v"))
       .unionAll(e0.select(col("pb").as("u"), col("pa").as("v")))
     val seeds = Tables.part(spark, dir)
@@ -225,7 +203,7 @@ object GraphOps {
     val deg = e.groupBy(col("u").as("n")).agg(count(lit(1)).as("deg"))
     val base = lit(15L * PageRankInitMass / 100L)
     val be = maybeBroadcast(e)
-    var mass = materialize(
+    var mass = Barrier.eager(
       nodes.select(col("n"), lit(PageRankInitMass).as("mass")))
     var round = 1
     var delta = Long.MaxValue
@@ -235,9 +213,9 @@ object GraphOps {
         .join(be, col("n") === be("u"))
         .groupBy(col("v")).agg(sum(col("share")).as("in_mass"))
       val nr = nodes
-      val next = materialize(nr.join(incoming, nr("n") === incoming("v"), "left")
+      val next = Barrier.eager(nr.join(incoming, nr("n") === incoming("v"), "left")
         .select(nr("n"),
-          (base + expr("85 * coalesce(in_mass, 0L) div 100")).as("mass")))
+          (base + expr("85 * coalesce(in_mass, 0L) div 100")).as("mass")), required = true)
       delta = next.as("a").join(mass.as("b"), "n")
         .agg(coalesce(max(abs(col("a.mass") - col("b.mass"))), lit(0L)))
         .collect()(0).getLong(0)
@@ -268,7 +246,7 @@ object GraphOps {
     * map-side-combined sum keyed on the node id — state is one
     * fixed-width (node, mass) row per node, linear in the catalog. */
   def pageRank(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = materialize(edges(spark, dir, minSupport = 2))
+    val e0 = Barrier.eager(edges(spark, dir, minSupport = 2))
     val e = e0.select(col("pa").as("u"), col("pb").as("v"))
       .unionAll(e0.select(col("pb").as("u"), col("pa").as("v")))
     val deg = e.groupBy(col("u").as("n")).agg(count(lit(1)).as("deg"))
@@ -344,7 +322,7 @@ object GraphOps {
     val before: Column = // (deg, id) lexicographic: total order, ids unique
       col("da.deg") < col("db.deg") ||
       (col("da.deg") === col("db.deg") && col("pa") < col("pb"))
-    val o = materialize(e
+    val o = Barrier.eager(e
       .join(d.as("da"), col("pa") === col("da.n"))
       .join(d.as("db"), col("pb") === col("db.n"))
       .select(when(before, col("pa")).otherwise(col("pb")).as("u"),
@@ -357,7 +335,7 @@ object GraphOps {
   }
 
   def triangleStats(spark: SparkSession, dir: String): DataFrame = {
-    val e = materialize(edges(spark, dir, minSupport = 1))
+    val e = Barrier.eager(edges(spark, dir, minSupport = 1))
     val d = e.select(col("pa").as("n")).unionAll(e.select(col("pb").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("deg"))
     // true wedge count Σ deg·(deg−1)/2 — a tiny aggregate over the
@@ -433,7 +411,7 @@ object GraphOps {
     * in GraphOpsSpec so an estimator regression fails loudly instead
     * of green-matching a broken value. */
   def triangleEstimate(spark: SparkSession, dir: String): DataFrame = {
-    val e  = materialize(edges(spark, dir, minSupport = 1))
+    val e  = Barrier.eager(edges(spark, dir, minSupport = 1))
     val es = e.filter(edgeKeep(col("pa"), col("pb")))
     val p3inv = (TriSampleMod / TriSampleKeep) // 1/p, integer by construction
     val scale = p3inv * p3inv * p3inv
@@ -524,8 +502,8 @@ object GraphOps {
     * Reference framing: the co-purchase mining family of
     * dataflow_transform.py's grouped aggregates (see SURVEY §2). */
   def kCore(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = materialize(edges(spark, dir, minSupport = 1))
-    val e = materialize(e0.select(col("pa").as("u"), col("pb").as("v"))
+    val e0 = Barrier.eager(edges(spark, dir, minSupport = 1))
+    val e = Barrier.eager(e0.select(col("pa").as("u"), col("pb").as("v"))
       .unionAll(e0.select(col("pb").as("u"), col("pa").as("v"))))
     val k = kCoreThreshold(
       e.groupBy(col("u")).agg(count(lit(1)).as("deg")))
@@ -546,7 +524,7 @@ object GraphOps {
     // skip the input barrier when the caller already checkpointed the
     // symmetric edge list (kCore does — the threshold aggregate needed
     // it); a second eager serialize of the full edge set was pure cost
-    var e = if (inputMaterialized) edges0 else materialize(edges0)
+    var e = if (inputMaterialized) edges0 else Barrier.eager(edges0)
     // fixpoint on the EDGE count: the degree filter is a function of
     // the edge set alone, so an unchanged edge count is an unchanged
     // degree table — same fixpoint as counting survivors, but the
@@ -566,7 +544,7 @@ object GraphOps {
       val keepV = keep.select(col("u").as("kv"))
       e = e.join(keepU, e("u") === col("ku"), "left_semi")
         .join(keepV, e("v") === col("kv"), "left_semi")
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(Barrier.lazily(_, required = true))
       n = e.count()
       round += 1
     }
@@ -632,7 +610,7 @@ object GraphOps {
     * list. Reference framing: the co-purchase mining family of
     * dataflow_transform.py's grouped aggregates (SURVEY §2). */
   def labelProp(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = materialize(edges(spark, dir, minSupport = 2))
+    val e0 = Barrier.eager(edges(spark, dir, minSupport = 2))
     val e = e0.select(col("pa").as("u"), col("pb").as("v"))
       .unionAll(e0.select(col("pb").as("u"), col("pa").as("v")))
     // fresh scan per reference (attribute-id collision, see pageRank)
@@ -733,7 +711,7 @@ object GraphOps {
   def hits(spark: SparkSession, dir: String): DataFrame = {
     // lazy (r15): first broadcast of `be` materializes the dedup'd
     // edge list; no driver-side scalar needs it eagerly
-    val buys = materializeLazy(
+    val buys = Barrier.lazily(
       Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
         .join(Tables.lineitem(spark, dir)
           .select(col("l_orderkey"), col("l_partkey")),
@@ -753,7 +731,7 @@ object GraphOps {
       // truncation is LAZY — the max-aggregate's broadcast sub-job
       // doubles as the materializer, so the 4 renorms stop being 4
       // serial job barriers on the driver thread.
-      val df = materializeLazy(df0)
+      val df = Barrier.lazily(df0, required = true)
       val mx = df.agg(max(col(score)).as("mx"))
       df.crossJoin(broadcast(mx))
         .select(df.columns.filter(_ != score).map(col) :+
@@ -833,7 +811,7 @@ object GraphOps {
     * a map-side-combined sum over fixed-width (node, mass) rows; the
     * seed flag is a catalog-sized broadcast. */
   def pprBrand(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = materialize(edges(spark, dir, minSupport = 2))
+    val e0 = Barrier.eager(edges(spark, dir, minSupport = 2))
     val e = e0.select(col("pa").as("u"), col("pb").as("v"))
       .unionAll(e0.select(col("pb").as("u"), col("pa").as("v")))
     val deg = e.groupBy(col("u").as("n")).agg(count(lit(1)).as("deg"))
@@ -915,7 +893,7 @@ object GraphOps {
     * broadcast-sized degree joins attach the margins. Nothing wider
     * than three ids and two longs ever shuffles. */
   def linkPrediction(spark: SparkSession, dir: String): DataFrame =
-    linkPredictionOf(materialize(edges(spark, dir, minSupport = 2)))
+    linkPredictionOf(Barrier.eager(edges(spark, dir, minSupport = 2)))
 
   /** The scoring core on an explicit canonical (pa < pb) edge list —
     * exposed for planted-graph specs. */

@@ -81,7 +81,7 @@ object Bucketing {
           sum(round(col("l_extendedprice") * (lit(1) - col("l_discount"))
             * 100, 0).cast("long")).as("revenue_cents"))
       // materialize under the pinned confs, then assert the plan shape
-      val out = joined.localCheckpoint(true)
+      val out = graft.plans.Barrier.eager(joined, required = true)
       val plan = joined.queryExecution.executedPlan.toString
       require(!plan.contains("Exchange"),
         s"bucketed join must be shuffle-free, got:\n$plan")

@@ -179,7 +179,7 @@ object ShardOps {
         col("shard_doc").as("shard")))
     val clShard = long.groupBy(col("scheme"), col("rep"), col("shard"))
       .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(graft.plans.Barrier.eager(_))
     val clSpan = clShard.groupBy(col("scheme"), col("rep"))
       .agg(count(lit(1)).as("n_shards"))
     clShard.join(clSpan, Seq("scheme", "rep"))

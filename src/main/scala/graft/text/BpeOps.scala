@@ -67,8 +67,7 @@ object BpeOps {
     val wf = Tables.documents(spark, dir)
       .select(explode(tokensCol(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(graft.plans.Barrier.eager(_))
     val w = Window.partitionBy("word").orderBy("i")
     var merges = Vector.empty[(String, String)]
     while (merges.length < BpeRounds) {

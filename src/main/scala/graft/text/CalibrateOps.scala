@@ -124,7 +124,7 @@ object CalibrateOps {
         // protocol caught as an ANSI ARITHMETIC_OVERFLOW (round 9)
         expr("((cast(rank_src as bigint) - 1) * 1000000) div greatest(n_src - 1, 1)"))
     val tq = cal.agg(expr("count(1) div 4").as("topq"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(graft.plans.Barrier.eager(_))
     // Round 14: the global top-quartile membership WITHOUT a global
     // row sort (this was the last corpus-sized designed sort outside
     // the documented q76/q114/q219 cases). "rank ≤ topq under

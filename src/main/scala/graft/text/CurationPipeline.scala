@@ -49,7 +49,6 @@ object CurationPipeline {
   val AlphaPct = 10L
 
   def curationManifest(spark: SparkSession, dir: String): DataFrame = {
-    val ckpt = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     // r15: the dedup funnel (LSH + star-CC rounds) and the conformal
     // scorer (16 sequential gradient jobs) both run their internal
     // actions at CONSTRUCTION; they are independent until the `adm`
@@ -70,7 +69,7 @@ object CurationPipeline {
       .join(j.select(col("doc_id"), col("s_u")), "doc_id")
       .crossJoin(broadcast(thr))
       .filter(col("s_u") <= col("thr_s_u"))
-      .localCheckpoint(true, ckpt)
+      .transform(graft.plans.Barrier.eager(_))
     val avail = adm.groupBy(col("source"))
       .agg(sum(col("n_tokens")).cast("long").as("avail"))
     val plan = MixturePlan.waterfillOn(avail)

@@ -5,11 +5,11 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.dedup.DedupOps
 import graft.functions.TextExprs._
 import graft.tables.Tables
+import graft.plans.Barrier
 
 /** q255: INCREMENTAL curation refresh — the production twin of q254
   * (r13 verdict ask #1). The reference re-runs its whole pipeline
@@ -88,9 +88,6 @@ object CurationRefresh {
     def tables: Seq[String] = Seq(docs, fps, bands, hsets, grams)
   }
 
-  private def ck(df: DataFrame): DataFrame =
-    df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-
   /** Single-pass heavy projection (r15): tokenize ONCE per row and
     * derive every text-derived artifact from the shared token array —
     * funnel columns (n_tokens, fp), classifier features (y, x1..x5),
@@ -162,7 +159,7 @@ object CurationRefresh {
     // ONE corpus tokenization (r15, see heavyProjection): funnel
     // columns, features, shingles, grams all derive from this
     // checkpoint; the per-artifact frames below are narrow selects.
-    val heavy = ck(heavyProjection(corpus))
+    val heavy = Barrier.eager(heavyProjection(corpus))
     val cfun = heavy.select(col("doc_id"), col("lang"), col("source"),
       col("n_tokens"), col("fp"))
     val cfeats = heavy.select(col("doc_id"), col("y"), col("x1"),
@@ -192,7 +189,7 @@ object CurationRefresh {
       try {
         val fFps = Future { cKeep.write.mode("overwrite").saveAsTable(st.fps) }
         // near-dup: corpus-internal verified pairs → components → rep map
-        val fRep = Future { ck(DedupOps.starComponents(
+        val fRep = Future { Barrier.eager(DedupOps.starComponents(
           DedupOps.minhashLshFrom(chsets).select(col("d1"), col("d2")))._1) }
         // gram posting index (immutable corpus substring evidence)
         val fGrams = Future {
@@ -209,7 +206,7 @@ object CurationRefresh {
         }
         // corpus substring ledger off the gram postings
         val fCsub = fGrams.map { _ =>
-          ck(cgrams
+          Barrier.eager(cgrams
             .join(spark.table(st.grams).filter(col("nd") >= 2), Seq("g"), "left")
             .groupBy(col("doc_id"))
             .agg(any_value(col("n_grams")).cast("long").as("n_grams"),
@@ -272,7 +269,7 @@ object CurationRefresh {
 
     // batch featurization — the only tokenization in the refresh, and
     // (r15) ONE pass: every batch artifact derives from this checkpoint
-    val bheavy = ck(heavyProjection(batch))
+    val bheavy = Barrier.eager(heavyProjection(batch))
     val bfun = bheavy.select(col("doc_id"), col("lang"), col("source"),
       col("n_tokens"), col("fp"))
     val bfeats = bheavy.select(col("doc_id"), col("y"), col("x1"),
@@ -299,7 +296,7 @@ object CurationRefresh {
         val fpProbe = spark.table(st.fps).withColumnRenamed("fp", "sfp")
           .join(broadcast(bfpMin), col("sfp") <=> col("fp"))
           .select(col("fp"), col("keep_id"))
-        ck(bfun.select(col("doc_id"), col("fp"))
+        Barrier.eager(bfun.select(col("doc_id"), col("fp"))
           .join(broadcast(bfpMin.withColumnRenamed("fp", "bfp")),
             col("fp") <=> col("bfp"))
           .join(broadcast(fpProbe.withColumnRenamed("fp", "pfp")),
@@ -312,14 +309,14 @@ object CurationRefresh {
       // (candidates are batch-incident only), batch×batch runs the
       // verified pipeline; contracted component graph over reps+batch
       () => {
-        val bsigs = ck(bhsets.select(col("doc_id"), col("hs"), col("n"),
+        val bsigs = Barrier.eager(bhsets.select(col("doc_id"), col("hs"), col("n"),
           minhashSigCol(col("hs")).as("sig")))
         val bbands = bsigs
           .select(col("doc_id"), col("sig"),
             explode(sequence(lit(0), lit(Bands - 1))).as("b"))
           .select(col("doc_id"), col("b"),
             bandKeyCol(col("sig"), col("b")).as("bkey"))
-        val candBC = ck(spark.table(st.bands)
+        val candBC = Barrier.eager(spark.table(st.bands)
           .join(broadcast(bbands.select(col("b"), col("bkey"),
             col("doc_id").as("nid"))), Seq("b", "bkey"))
           .select(col("nid"), col("doc_id").as("cid"), col("rep").as("crep"))
@@ -343,14 +340,14 @@ object CurationRefresh {
           .filter(col("jaccard") >= DedupOps.JaccardThreshold)
           .select(col("nid"), col("crep"))
         val pairsBB = DedupOps.minhashLshFrom(bhsets).select(col("d1"), col("d2"))
-        ck(DedupOps.starComponents(
+        Barrier.eager(DedupOps.starComponents(
           verifiedBC.select(col("nid").as("d1"), col("crep").as("d2"))
             .unionByName(pairsBB))._1)
       },
       // -- substring: merge batch incidence into the posting probe
       () => {
         val bDistinctG = bgrams.select(col("g"), col("doc_id")).distinct()
-        val binc = ck(bDistinctG.groupBy(col("g"))
+        val binc = Barrier.eager(bDistinctG.groupBy(col("g"))
           .agg(count(lit(1)).as("bnd"), min(col("doc_id")).as("bowner")))
         val touched = spark.table(st.grams)
           .join(broadcast(binc.select(col("g"))), Seq("g"))
@@ -359,7 +356,7 @@ object CurationRefresh {
           .select(col("g"),
             (col("bnd") + coalesce(col("nd"), lit(0L))).as("nd_all"),
             coalesce(col("owner"), col("bowner")).as("owner_all"))
-        ck(bgrams.join(mergedInc, Seq("g"))
+        Barrier.eager(bgrams.join(mergedInc, Seq("g"))
           .groupBy(col("doc_id"))
           .agg(any_value(col("n_grams")).cast("long").as("n_grams"),
             count(when(col("nd_all") >= 2 && col("owner_all") < col("doc_id"), 1))
@@ -490,7 +487,7 @@ object CurationRefresh {
     * dropped, so the returned frame has no catalog dependency. */
   def curationRefresh(spark: SparkSession, dir: String): DataFrame = {
     val st = buildState(spark, dir)
-    try ck(refresh(spark, dir, st))
+    try Barrier.eager(refresh(spark, dir, st), required = true)
     finally st.tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 }

@@ -158,8 +158,7 @@ object LangIdTrained {
     * Returns (weights, materialized feature table). */
   def learn(spark: SparkSession, dir: String): (Array[Array[Long]], DataFrame) = {
     require(Rounds % Fuse == 0, s"Fuse=$Fuse must divide Rounds=$Rounds")
-    val f = feats(spark, dir).localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val f = graft.plans.Barrier.eager(feats(spark, dir))
     val n = f.filter(col("split") === "train").count()
     val tr = f.filter(col("split") === "train")
       .coalesce(math.max(1, (n / 100000L).toInt))

@@ -142,7 +142,7 @@ object MixturePlan {
         // BIGINT would error loudly; silent skew weights are worse)
         expr("""cast(cast(alloc as decimal(38,0)) * 1000000
                |  div greatest(avail, 1) as bigint)""".stripMargin).as("w_ppm"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(graft.plans.Barrier.eager(_))
     val g = w.agg(
         sum(col("avail")).as("t_total"),
         sum(expr("cast(avail as decimal(38,0)) * w_ppm")).as("sw"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.tables.Tables
 import graft.functions.TextExprs._
+import graft.plans.Barrier
 
 /** Trained linear quality classifier (q146) — the fastText-style
   * learned filter stage of an LLM data pipeline (CCNet / GPT-3 "quality
@@ -130,8 +131,7 @@ object QualityClassifier {
     * so ANY partitioning of the input (state parquet, state ∪ batch
     * union, text-derived) yields bit-identical weights. */
   private[graft] def learnFrom(feats0: DataFrame): (Array[Long], DataFrame) = {
-    val f = feats0.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val f = Barrier.eager(feats0)
     val n = f.count()
     // size-consolidated gradient view (~100k rows/partition, floor 1):
     // collapses the gate corpus's near-empty tasks per round, keeps
@@ -419,7 +419,7 @@ object QualityClassifier {
       .select(col("doc_id"), (-col("logit_u")).as("s_u"))
     val split = TextOps.hashSplit(spark, dir).select(col("doc_id"), col("split"))
     scored.join(split, "doc_id")
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
   }
 
   /** The calibrated thresholds — one row per α: (alpha_pct, n_cal,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.tables.Tables
 import graft.functions.TextExprs._
 import graft.functions.NativeExprs
+import graft.plans.Barrier
 
 /** Index-accelerated exact substring search (q158) — the
   * decontamination-lookup shape: given a set of probe strings (test-set
@@ -125,8 +126,7 @@ object SearchOps {
       .select(col("doc_id"), tokensCol(col("text")).as("t"))
       .select(col("doc_id"), size(col("t")).cast("long").as("dl"),
         explode(col("t")).as("term"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val post = docs.groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
     val dft = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -181,8 +181,7 @@ object SearchOps {
     val page = bm25Retrieval(spark, dir)
       .select(col("query_id"), col("doc_id"), col("rank").as("r_lex"),
         col("score_u"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val qterms = broadcast(
       Bm25Queries.flatMap { case (q, ts) =>
         ts.zipWithIndex.map { case (t, i) => (q, t, i + 1) }
@@ -302,8 +301,7 @@ object SearchOps {
     * auditable. */
   def hybridRetrieval(spark: SparkSession, dir: String): DataFrame = {
     val bm = bm25Retrieval(spark, dir)
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val lex = bm.select(col("query_id"), col("doc_id"), col("rank").as("r_lex"))
     val seeds = bm.filter(col("rank") === 1)
       .select(col("query_id"), col("doc_id").as("seed_id"))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
 import graft.functions.TextExprs._
+import graft.plans.Barrier
 
 /** Text-analysis operators over the `documents` table — the text half of
   * the training-data-pipeline surface (SURVEY.md §7 extensions; see the
@@ -331,7 +332,7 @@ object TextOps {
     val ex = Tables.spread(Tables.documents(spark, dir))
       .select(col("lang"), col("doc_id"), tokensCol(col("text")).as("t"))
       .select(col("lang"), col("doc_id"), explode(col("t")).as("term"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val tf = ex.groupBy(col("lang"), col("term")).agg(count(lit(1)).as("tf"))
     val df = ex.select(col("doc_id"), col("term")).distinct()
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -398,7 +399,7 @@ object TextOps {
     val pres = docs
       .select(col("source"), col("doc_id"),
         explode(array_distinct(tokensCol(col("text")))).as("term"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val a = pres.groupBy(col("source"), col("term")).agg(count(lit(1)).as("a"))
     val dft = pres.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nsrc = docs
@@ -1131,7 +1132,7 @@ object TextOps {
     * n_tokens) frame — exposed for planted-front specs. */
   def skylineOf(points: DataFrame): DataFrame = {
     val pts = points
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val buckets = pts
       .groupBy(expr(s"quality_bp div $SkyBucketBp").as("b"))
       .agg(max(col("n_tokens")).as("max_t"))
@@ -1207,7 +1208,7 @@ object TextOps {
     val sh = Tables.spread(Tables.documents(spark, dir))
       .select(explode(shinglesCol(tokensCol(col("text")))).as("s"))
       .select(col("s"), polyHashCol(col("s")).as("h"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val sk = sh.agg(graft.functions.NativeExprs.countMinAgg(
       col("h"), CmWidth, CmA, CmB, P).as("sk"))
     val exact = sh.groupBy(col("s"), col("h")).agg(count(lit(1)).as("n"))
@@ -1631,7 +1632,7 @@ object TextOps {
     * the streaming twin drains exactly this shape. */
   def mixtureDiversityOfCounts(strata0: DataFrame): DataFrame = {
     val strata = strata0
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     def axis(name: String, keyed: DataFrame): DataFrame =
       keyed.agg(
           count(lit(1)).as("n_strata"),
@@ -1936,7 +1937,7 @@ object TextOps {
     val docs = Tables.spread(Tables.documents(spark, dir))
       .select(col("doc_id"), size(tokensCol(col("text"))).cast("long").as("n_tokens"))
       .withColumn("blocks", expr(s"n_tokens div $SpanBlockW"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val spans = docs.filter(col("blocks") > 0)
       .select(col("doc_id"),
         explode(sequence(lit(0L), col("blocks") - 1)).as("b"))
@@ -2006,7 +2007,7 @@ object TextOps {
   def ksOfHist(hist0: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val hist = hist0
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val vals = hist.select(col("v")).distinct()
     val srcs = hist.groupBy(col("source")).agg(sum(col("cnt")).as("n_s"))
     val nTot = hist.agg(sum(col("cnt")).as("nn"))
@@ -2115,8 +2116,7 @@ object TextOps {
     // diagonal, agreement, macro fold, per-class rows) — truncate its
     // lineage so the ONE corpus-wide aggregate runs once, not per
     // reference (class²-sized: a bounded model artifact)
-    evalOfConfusion(langId(spark, dir).localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    evalOfConfusion(Barrier.eager(langId(spark, dir)))
 
   /** The metric derivation on an explicit (lang, predicted, n)
     * confusion table — exposed for hand-computed fixture specs

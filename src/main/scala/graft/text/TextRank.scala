@@ -42,10 +42,6 @@ object TextRank {
   /** Keywords emitted. */
   val TopK = 20
 
-  private def materialize(df: DataFrame): DataFrame = {
-    df.localCheckpoint(eager = true)
-  }
-
   def textRank(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.spread(Tables.documents(spark, dir))
       .select(tokensCol(col("text")).as("t"))
@@ -56,7 +52,7 @@ object TextRank {
       .select(explode(arrays_zip(col("a1"), col("a2"))).as("z"))
       .select(col("z.a1").as("w1"), col("z.a2").as("w2"))
     val dp = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-    val e = materialize(
+    val e = graft.plans.Barrier.eager(
       dp.select(col("w1").as("u"), col("w2").as("v"), col("c"))
         .unionAll(dp.select(col("w2").as("u"), col("w1").as("v"), col("c")))
         .groupBy("u", "v").agg(sum(col("c")).as("w"))

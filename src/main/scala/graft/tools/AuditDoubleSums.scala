@@ -44,8 +44,7 @@ object AuditDoubleSums {
         case e: Throwable =>
           rows += name -> s"AUDIT-ERROR: ${Option(e.getMessage).getOrElse(e.getClass.getName).linesIterator.take(1).mkString.take(120)}"
       }
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.plans.Barrier.releaseAll(spark)
     }
     println("=== double/float Sum children per query (analyzed plans) ===")
     rows.foreach { case (q, c) => println(s"[dsum] $q\t$c") }

@@ -12,9 +12,7 @@ object ExplainSome {
   def main(args: Array[String]): Unit = {
     val dir = args(0); val outDir = args(1); val suffix = args(2)
     val names = args(3).split(",").toSeq
-    val confs = args.drop(4).map { kv =>
-      val Array(k, v) = kv.split("=", 2); (k, v)
-    }
+    val confs = args.drop(4).map(DevArgs.conf)
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false").getOrCreate()
@@ -22,7 +20,7 @@ object ExplainSome {
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     Files.createDirectories(Paths.get(outDir))
     val qs = graft.SparkEntry.queries
-    for (prefix <- names; (name, fn) <- qs if name.startsWith(prefix)) {
+    for (arg <- names; (name, fn) <- qs if DevArgs.selects(arg, name)) {
       val txt =
         try fn(spark, dir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

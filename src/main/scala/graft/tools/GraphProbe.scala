@@ -26,8 +26,7 @@ object GraphProbe {
       val t0 = System.nanoTime()
       val r = f
       println(f"[probe] $name%-24s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($r)")
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.plans.Barrier.releaseAll(spark)
     }
     time("q122 bfs")(graft.graph.GraphOps.graphBfs(spark, dir).count())
     time("q123 triangles")(

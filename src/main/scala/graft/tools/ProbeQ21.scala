@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.plans.Barrier
 
 /** Dev-only: probe a minhashLsh near-dup cluster for lost docs (the
   * 100× scale protocol's doc-52551 investigation). Prints per-doc pair
@@ -18,7 +19,7 @@ object ProbeQ21 {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val pairs = graft.dedup.DedupOps.minhashLsh(spark, dir)
-      .localCheckpoint(true)
+      .transform(Barrier.eager(_))
     println(s"[probe] total pairs: ${pairs.count()}")
     for (id <- ids) {
       val n = pairs.filter(col("d1") === id || col("d2") === id).count()
@@ -35,11 +36,11 @@ object ProbeQ21 {
           .shingleHashes(tokensCol(col("text")), ShingleW, P).as("hs"))
       .filter(size(col("hs")) > 0)
       .withColumn("n", size(col("hs")))
-      .localCheckpoint(true)
+      .transform(Barrier.eager(_))
     for (id <- ids)
       println(s"[probe] hsets $id: " +
         hsets.filter(col("doc_id") === id).count())
-    val groups = DedupOps.collapseShingleSets(hsets).localCheckpoint(true)
+    val groups = Barrier.eager(DedupOps.collapseShingleSets(hsets))
     for (id <- ids) {
       val g = groups.filter(array_contains(col("members"), id))
         .select(col("rep"), col("gsize")).collect()
@@ -47,7 +48,7 @@ object ProbeQ21 {
         g.map(r => s"rep=${r.getLong(0)} gsize=${r.getInt(1)}").mkString(","))
     }
     val cand = DedupOps.minhashRepCandidates(
-      groups.select(col("rep"), col("hs"))).localCheckpoint(true)
+      groups.select(col("rep"), col("hs"))).transform(Barrier.eager(_))
     println(s"[probe] candidates: ${cand.count()}")
     for (id <- ids)
       println(s"[probe] cand of $id: " +
@@ -55,7 +56,7 @@ object ProbeQ21 {
     // carried-sig integrity: n_agree from the columns cappedPairJoin
     // carried vs n_agree recomputed from the ground-truth hsets sigs
     val trueSig = groups.select(col("rep"),
-      minhashSigCol(col("hs")).as("tsig")).localCheckpoint(true)
+      minhashSigCol(col("hs")).as("tsig")).transform(Barrier.eager(_))
     val agree = cand
       .withColumn("n_carried", size(filter(
         zip_with(col("sig1"), col("sig2"), (x, y) => x === y), p => p)))

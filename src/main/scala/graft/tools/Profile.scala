@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
 import graft.functions.TextExprs._
+import graft.plans.Barrier
 
 /** Dev-only micro-profiler for the hot bench queries. */
 object Profile {
@@ -58,8 +59,8 @@ object Profile {
         .filter(size(col("hs")) > 0)
         .withColumn("n", size(col("hs")))
       time("q34 hsets")(hsets0.count())
-      val hsets = hsets0.localCheckpoint()
-      val sigs = hsets.select(col("doc_id"), minhashSigCol(col("hs")).as("sig")).localCheckpoint()
+      val hsets = Barrier.eager(hsets0)
+      val sigs = hsets.select(col("doc_id"), minhashSigCol(col("hs")).as("sig")).transform(Barrier.eager(_))
       time("q34 sigs")(sigs.count())
       val bands = sigs
         .select(col("doc_id"), explode(sequence(lit(0), lit(Bands - 1))).as("b"), col("sig"))

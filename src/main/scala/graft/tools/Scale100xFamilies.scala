@@ -285,7 +285,6 @@ object Scale100xFamilies {
       // 2·(M + RevCap) fan-out bound that keeps every build round's
       // candidate join sub-quadratic.
       val (inv, tInv) = timed {
-        val ckpt = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
         val edges = VectorOps.devBuildGraph(spark, lowDir,
           VectorOps.NswM, VectorOps.NswBuildRounds)
         // init modulus = CORPUS ROW COUNT, exactly as nswBuild derives
@@ -301,7 +300,7 @@ object Scale100xFamilies {
           .filter(col("dst") =!= col("src")).select("src", "dst").distinct()
         val g = VectorOps.devSymCapped(edges)
           .union(VectorOps.devSymCapped(init)).distinct()
-          .localCheckpoint(true, ckpt)
+          .transform(graft.plans.Barrier.eager(_))
         val maxDeg = g.groupBy("src").agg(count(lit(1)).as("d"))
           .agg(max("d")).collect().head.getLong(0)
         val comps = graft.dedup.DedupOps.starComponents(

@@ -7,7 +7,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 object StageTime {
   def main(args: Array[String]): Unit = {
     val dir = args(0); val q = args(1)
-    val confs = args.drop(2).map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
+    val confs = args.drop(2).map(DevArgs.conf)
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -17,10 +17,8 @@ object StageTime {
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     val fn = graft.SparkEntry.queries(q)
     fn(spark, dir).count() // warm-up
-    // drop warm-up state exactly like Bench.reset(): leaked localCheckpoint
-    // blocks from the warm-up otherwise GC-storm the timed run
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    // the warm-up's leaked barrier blocks would GC-storm the timed run
+    graft.plans.Barrier.releaseAll(spark, blocking = true)
     val events = new ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(

@@ -4,7 +4,6 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.tables.Tables
 
@@ -124,7 +123,7 @@ object AnnIndexStore {
     buildsRun += 1
     val e = vecsOf(spark, dir)
       .withColumn("nrm", sqrt(VectorOps.dotCol(col("v"), col("v"))))
-      .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(graft.plans.Barrier.eager(_))
     val (gT, eT) = (
       s"graft_q257_edges_${runTag}_${math.abs(dir.hashCode)}",
       s"graft_q257_vecs_${runTag}_${math.abs(dir.hashCode)}")

@@ -3,6 +3,7 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
+import graft.plans.Barrier
 
 /** q205: greedy k-center coreset selection (Gonzalez, "Clustering to
   * minimize the maximum intercluster distance", TCS 1985) — the
@@ -54,7 +55,7 @@ object CoresetOps {
     import spark.implicits._
     val base = vecs
       .withColumn("qq", dot(col("q"), col("q")).cast("long"))
-      .localCheckpoint(true)
+      .transform(Barrier.eager(_))
 
     def d2(cvec: Seq[Double]): Column = {
       val cc = cvec.map(x => x * x).sum.toLong
@@ -65,7 +66,7 @@ object CoresetOps {
     val first = base.orderBy(col("vec_id")).limit(1)
       .select(col("vec_id"), col("q")).collect()(0)
     var cvec: Seq[Double] = first.getSeq[Double](1)
-    var cur = base.withColumn("dist", d2(cvec)).localCheckpoint(true)
+    var cur = Barrier.eager(base.withColumn("dist", d2(cvec)), required = true)
     def radius(): Long =
       cur.agg(coalesce(max(col("dist")), lit(0L))).collect()(0).getLong(0)
     val ledger = collection.mutable.ArrayBuffer(
@@ -74,8 +75,8 @@ object CoresetOps {
       val pick = cur.orderBy(desc("dist"), col("vec_id")).limit(1)
         .select(col("vec_id"), col("dist"), col("q")).collect()(0)
       cvec = pick.getSeq[Double](2)
-      cur = cur.withColumn("dist", least(col("dist"), d2(cvec)))
-        .localCheckpoint(true)
+      cur = Barrier.eager(cur.withColumn("dist", least(col("dist"), d2(cvec))),
+        required = true)
       ledger += ((r.toLong, pick.getLong(0), pick.getLong(1), radius()))
     }
     ledger.toSeq.toDF("round", "center_id", "sel_dist2", "radius_after")

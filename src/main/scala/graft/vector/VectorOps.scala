@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
+import graft.plans.Barrier
 
 /** Embedding similarity operators over the `embeddings` table
   * (vec_id, embedding float[64], label) — the ANN half of the
@@ -696,7 +697,7 @@ object VectorOps {
       .withColumn("d", dists)
       .withColumn("cell", array_position(col("d"), array_min(col("d"))))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     // top-nProbe nearest cells per query (L2 → ascending; narrow
     // array_sort, zero shuffles — see topCells)
     val q = broadcast(e.filter(col("vec_id") < QueryMax)
@@ -794,7 +795,7 @@ object VectorOps {
     val e = vecs(spark, dir)
       .withColumn("d", centDots(col("v")))
       .withColumn("cell", array_position(col("d"), array_max(col("d"))))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val q = broadcast(e.filter(col("vec_id") < QueryMax)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"),
@@ -915,7 +916,6 @@ object VectorOps {
     * already-checkpointed `e(vec_id, v, nrm)`. */
   private def nswBuild(e: DataFrame, m: Int, buildRounds: Int)
       : (DataFrame, DataFrame) = {
-    val ckpt = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val n = e.count() // bounded driver scalar: corpus size for the init hash
     val init = e.select(col("vec_id").as("src"))
       .select(col("src"), explode(sequence(lit(0L), lit((m - 1).toLong))).as("j"))
@@ -923,7 +923,7 @@ object VectorOps {
         lit(1103515245L) * (col("src") * m + col("j")) + lit(12345L), lit(n)))
       .filter(col("dst") =!= col("src"))
       .select("src", "dst").distinct()
-      .localCheckpoint(true, ckpt)
+      .transform(Barrier.eager(_))
     // post-checkpoint stats are unknown, so the optimizer can't pick a
     // broadcast join on its own; `n` is already on the driver, so gate
     // the hint on actual size — below ~32 MB the scoring joins become
@@ -956,7 +956,7 @@ object VectorOps {
         // LAZY checkpoint: the fingerprint agg below is the round's
         // one materializing action (an eager checkpoint + separate agg
         // was two jobs per round — pure scheduling overhead at gate SF)
-        .localCheckpoint(false, ckpt) // truncate per-round lineage
+        .transform(Barrier.lazily(_, required = true)) // truncate per-round lineage
       // FIXPOINT EARLY EXIT (the q127 bfsFixpoint pattern, r12 verdict
       // ask #4): each round is a pure deterministic function of the
       // edge SET, so once a round is a no-op every later round is too
@@ -997,8 +997,7 @@ object VectorOps {
   /** Dev probe hook: the refined kNN edge table alone. */
   private[graft] def devBuildGraph(spark: SparkSession, dir: String,
                                    m: Int, buildRounds: Int): DataFrame = {
-    val ckpt = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    nswBuild(vecs(spark, dir).localCheckpoint(true, ckpt), m, buildRounds)._1
+    nswBuild(Barrier.eager(vecs(spark, dir)), m, buildRounds)._1
   }
 
   /** Size gate below which the whole corpus is a DRIVER ARTIFACT and
@@ -1017,8 +1016,7 @@ object VectorOps {
 
   def annGraphAt(spark: SparkSession, dir: String, m: Int,
                  buildRounds: Int, beam: Int, searchRounds: Int): DataFrame = {
-    val ckpt = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    annGraphOn(spark, vecs(spark, dir).localCheckpoint(true, ckpt),
+    annGraphOn(spark, Barrier.eager(vecs(spark, dir)),
       m, buildRounds, beam, searchRounds)
   }
 
@@ -1045,8 +1043,7 @@ object VectorOps {
     * also invoked directly by the parity spec at gate SF. */
   private[graft] def annGraphDistributed(spark: SparkSession, e: DataFrame,
       m: Int, buildRounds: Int, beam: Int, searchRounds: Int): DataFrame = {
-    val ckpt = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val g = nswGraph(e, m, buildRounds).localCheckpoint(true, ckpt)
+    val g = Barrier.eager(nswGraph(e, m, buildRounds))
     nswWalk(spark, g, e, beam, searchRounds)
   }
 
@@ -1066,7 +1063,6 @@ object VectorOps {
     * against a PERSISTED graph. */
   private[graft] def nswWalk(spark: SparkSession, g: DataFrame, e: DataFrame,
       beam: Int, searchRounds: Int): DataFrame = {
-    val ckpt = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val q = broadcast(e.filter(col("vec_id") < QueryMax)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn")))
     val wBeam = Window.partitionBy("query_id").orderBy(desc("cos"), col("node"))
@@ -1100,7 +1096,7 @@ object VectorOps {
         .withColumn("rn", row_number().over(wBeam)).filter(col("rn") <= beam)
         .select("query_id", "node", "cos")
         // lazy: the fixpoint collect below materializes the checkpoint
-        .localCheckpoint(false, ckpt)
+        .transform(Barrier.lazily(_, required = true))
       val cur = beamDf.select("query_id", "node").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       if (prevBeam != null && cur == prevBeam) walkDone = true
@@ -1589,7 +1585,6 @@ object VectorOps {
     * protocol runs the same probe over the 200k corpora and gates
     * route(organic)=ivf ∧ route(lowdim)=graph. */
   def annRouter(spark: SparkSession, dir: String): DataFrame = {
-    val ckpt = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     def routed(corpus: String, base: DataFrame): DataFrame = {
       val (mu2, c1Med, route) = geometryProbeOn(base)
       val hits = route match {
@@ -1613,9 +1608,9 @@ object VectorOps {
       () => routed("organic", Tables.spread(Tables.embeddings(spark, dir))
         .filter(col("vec_id") < RouterCap)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-        .localCheckpoint(true, ckpt)),
-      () => routed("lowdim", routerLowBase(spark, dir).localCheckpoint(true, ckpt)),
-      () => routed("clustered", routerClusterBase(spark, dir).localCheckpoint(true, ckpt))))
+        .transform(Barrier.eager(_, required = true))),
+      () => routed("lowdim", Barrier.eager(routerLowBase(spark, dir), required = true)),
+      () => routed("clustered", Barrier.eager(routerClusterBase(spark, dir), required = true))))
     branches(0).unionAll(branches(1)).unionAll(branches(2))
   }
 
@@ -2208,8 +2203,7 @@ object VectorOps {
           col("embedding").cast("array<double>"), PiQ), 1, PiDim).as("a"))
       // materialize so CollapseProject cannot inline the quantize
       // chain into all 256 Gram-cell aggregates (the q83/RpK note)
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val cells = for (i <- 0 until PiDim; j <- 0 until PiDim) yield
       sum(expr(s"cast(element_at(a, ${i + 1}) as decimal(38,0))" +
         s" * cast(element_at(a, ${j + 1}) as decimal(38,0))")).as(s"g_${i}_${j}")
@@ -2218,15 +2212,14 @@ object VectorOps {
       yield s"$i, $j, g_${i}_${j}").mkString(", ")
     val g = grow.select(expr(
         s"stack(${PiDim * PiDim}, $stackArgs) as (i, j, g)"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     import spark.implicits._
     val w0 = (0 until PiDim).map(j => (j, BigDecimal(PiS)))
       .toDF("j", "w").select(col("j"), col("w").cast("decimal(38,0)").as("w"))
     // each round's u is materialized: m and the renormalized w' BOTH
     // read it, and without truncation every reference re-derives the
-    // whole preceding round chain — the plan doubles per round (the
-    // DedupOps.materialize caveat; 16-row checkpoints, negligible)
+    // whole preceding round chain — the plan doubles per round
+    // (16-row checkpoints, negligible)
     val wFin = (1 to PiRounds).foldLeft(w0) { (w, _) =>
       // LAZY checkpoint (r15): the truncation still caps the plan at
       // one round, but the per-round materializing job is gone — the
@@ -2235,15 +2228,13 @@ object VectorOps {
       val u = g.join(w, g("j") === w("j"))
         .groupBy(g("i").as("i"))
         .agg(sum(expr("g * w")).as("u"))
-        .localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(Barrier.lazily(_, required = true))
       val m = u.agg(greatest(max(abs(col("u"))),
         lit(1).cast("decimal(38,0)")).as("m"))
       u.crossJoin(broadcast(m))
         .select(col("i").as("j"),
           expr(s"((u + m) * $PiS) div m - $PiS").cast("decimal(38,0)").as("w"))
-    }.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    }.transform(Barrier.eager(_))
     val lamNum = g.join(wFin.select(col("j").as("i"), col("w").as("wi")), "i")
       .join(wFin.select(col("j"), col("w").as("wj")), "j")
       .agg(sum(expr("g * wi * wj")).as("num"))
@@ -2401,7 +2392,7 @@ object VectorOps {
         dot(col("a"), col("a")).cast("long").as("norm2_u"),
         size(col("a")).cast("long").as("dims"),
         concat_ws(",", col("a").cast("array<long>").cast("array<string>")).as("fp"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Barrier.eager(_))
     val dup = base.groupBy(col("label"), col("fp"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("label"))

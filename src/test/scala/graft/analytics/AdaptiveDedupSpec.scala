@@ -97,11 +97,11 @@ class AdaptiveDedupSpec extends AnyFunSuite {
     assert(!plan.contains("collect_list"), "collapse ran on a dup-free corpus")
     assert(!plan.contains("row_number"), "capped grid ran though no bucket is hot")
     // hardened-route machinery is only visible in the plan string with
-    // the materialize barriers off (localCheckpoint hides its lineage
-    // behind an RDD scan)
-    val mKey = "graft.dedup.eagerMaterialize"
+    // the materialize barriers off (a barrier hides its lineage behind
+    // an RDD scan)
+    val mKey = graft.plans.Barrier.Conf
     val savedM = spark.conf.getOption(mKey)
-    spark.conf.set(mKey, "false")
+    spark.conf.set(mKey, "off")
     try {
       val hardPlan = withAdaptive(on = false)(
         DedupOps.minhashLsh(spark, dir).queryExecution.executedPlan.toString)

@@ -2,44 +2,61 @@ package graft.analytics
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.SparkTestSession
+import graft.plans.Barrier
 
-/** The dedup pipelines' lineage-truncation barriers must be a pure
-  * performance choice, never load-bearing for correctness: the default
-  * `localCheckpoint` path, the cluster-mode lineage-only path
-  * (`graft.dedup.eagerMaterialize=false`), and the fault-tolerant
-  * reliable-`checkpoint` path (`graft.dedup.materializeMode=reliable`)
-  * must all produce identical rows on the multi-self-join queries that
-  * lean on the barriers hardest (q21 LSH, q72 cluster propagation, q98
-  * consensus overlay). */
+/** Materialization barriers must be a pure performance choice, never
+  * load-bearing for correctness: the default `localCheckpoint` path,
+  * the lineage-only path (`graft.materialize=off`) and the
+  * fault-tolerant reliable-`checkpoint` path (`graft.materialize=reliable`)
+  * must produce identical rows for every SparkEntry query. */
 class MaterializeModesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
   private val dir = "/root/testdata/sf0.001"
-  private val queries = Seq("q21_minhash_lsh", "q72_dedup_clusters", "q98_consensus_neardup")
+  private val names = graft.SparkEntry.queries.keys.toSeq.sorted
+  // the multi-self-join dedup queries that lean on the barriers hardest
+  private val dedupHeavy = Seq("q21_minhash_lsh", "q72_dedup_clusters", "q98_consensus_neardup")
 
-  private def withConfs[A](kvs: (String, String)*)(body: => A): A = {
-    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+  private def withMode[A](mode: String)(body: => A): A = {
+    val saved = spark.conf.getOption(Barrier.Conf)
+    spark.conf.set(Barrier.Conf, mode)
+    try body finally saved match {
+      case Some(v) => spark.conf.set(Barrier.Conf, v)
+      case None    => spark.conf.unset(Barrier.Conf)
     }
   }
 
-  private def rows(name: String): Set[String] =
-    graft.SparkEntry.queries(name)(spark, dir)
-      .collect().map(_.mkString("|")).toSet
+  /** A query's row set, or its error; barrier blocks are released
+    * between queries the way the runners do. */
+  private def rows(name: String): Either[String, Set[String]] =
+    try Right(graft.SparkEntry.queries(name)(spark, dir)
+      .collect().map(_.mkString("|")).toSet)
+    catch { case e: Exception => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}".take(300)) }
+    finally Barrier.releaseAll(spark)
 
-  private lazy val defaults: Map[String, Set[String]] =
-    queries.map(n => n -> rows(n)).toMap
+  private lazy val local: Map[String, Either[String, Set[String]]] =
+    withMode("local")(names.map(n => n -> rows(n)).toMap)
 
-  test("lineage-only path (eagerMaterialize=false) matches the localCheckpoint default") {
-    withConfs("graft.dedup.eagerMaterialize" -> "false") {
-      for (n <- queries) {
-        val got = rows(n)
-        assert(got === defaults(n), s"$n diverged on the lineage-only path")
-        assert(got.nonEmpty, s"$n returned nothing")
+  /** Every query whose rows under `mode` differ from `local`. */
+  private def diverged(mode: String): Seq[String] = withMode(mode) {
+    names.flatMap { n =>
+      (local(n), rows(n)) match {
+        case (Right(a), Right(b)) if a == b => None
+        case (Right(a), Right(b)) =>
+          Some(s"$n: ${(a -- b).size} rows only under local, ${(b -- a).size} only under $mode")
+        case (l, got) => Some(s"$n: local=${l.left.getOrElse("ok")} $mode=${got.left.getOrElse("ok")}")
       }
     }
+  }
+
+  test("every query runs under the default local barriers") {
+    val failed = names.filter(n => local(n).isLeft).map(n => s"$n: ${local(n).left.getOrElse("")}")
+    assert(failed.isEmpty, failed.mkString("\n"))
+    for (n <- dedupHeavy) assert(local(n).exists(_.nonEmpty), s"$n returned nothing")
+  }
+
+  test("lineage-only path (off) matches local on every query") {
+    val bad = diverged("off")
+    assert(bad.isEmpty, s"${bad.size} queries diverged under off:\n" + bad.mkString("\n"))
   }
 
   test("reliable checkpoint path matches the localCheckpoint default") {
@@ -47,9 +64,9 @@ class MaterializeModesSpec extends AnyFunSuite {
     graft.sources.TempDirs.deleteOnExit(ckpt)
     val saved = Option(spark.sparkContext.getCheckpointDir).flatten
     spark.sparkContext.setCheckpointDir(ckpt.toString)
-    try withConfs("graft.dedup.materializeMode" -> "reliable") {
-      for (n <- queries)
-        assert(rows(n) === defaults(n), s"$n diverged on the reliable-checkpoint path")
+    try {
+      val bad = diverged("reliable")
+      assert(bad.isEmpty, s"${bad.size} queries diverged under reliable:\n" + bad.mkString("\n"))
     } finally saved.foreach(spark.sparkContext.setCheckpointDir)
   }
 }

@@ -106,13 +106,13 @@ class ScalePlanSpec extends AnyFunSuite {
     }
 
   test("dedup pipelines never shuffle text; candidate stages shuffle only fixed-width columns") {
-    // eagerMaterialize=false exposes the WHOLE pipeline as one plan —
-    // the same seam a cluster deployment uses (localCheckpoint is not
-    // fault-tolerant), so the assertion covers exactly the plan that
+    // graft.materialize=off exposes the WHOLE pipeline as one plan —
+    // the lineage a cluster deployment would otherwise checkpoint
+    // between stages, so the assertion covers every shuffle that
     // would run at scale.
-    val key = "graft.dedup.eagerMaterialize"
+    val key = graft.plans.Barrier.Conf
     val saved = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
+    spark.conf.set(key, "off")
     try withPlanConfs(noBroadcast = false) {
       val q21 = graft.dedup.DedupOps.minhashLsh(spark, dir)
       val q73 = graft.dedup.DedupOps.simhashNearDup(spark, dir)

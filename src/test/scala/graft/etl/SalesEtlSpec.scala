@@ -190,6 +190,14 @@ class SalesEtlSharedFrameSpec extends org.scalatest.funsuite.AnyFunSuite {
     (spark.sparkContext.getPersistentRDDs.size,
      org.apache.spark.sql.SparkTestInternals.numCachedEntries(spark))
 
+  /** The baseline with other specs' leftovers dropped first: the
+    * ContextCleaner unpersists their garbage RDDs at GC-driven times,
+    * which would move the count while `runPipeline` runs. */
+  private def cleanBaseline: (Int, Int) = {
+    graft.plans.Barrier.releaseAll(spark, blocking = true)
+    cacheEntries
+  }
+
   /** Stages completed while `f` ran. */
   private def stagesOf(f: => Unit): Seq[StageInfo] = {
     val sc = spark.sparkContext
@@ -214,7 +222,7 @@ class SalesEtlSharedFrameSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("one stage scans the CSV and one writes the dedup shuffle; the cache is released") {
     val out = java.nio.file.Files.createTempDirectory("etl_one_scan")
     graft.sources.TempDirs.deleteOnExit(out)
-    val before = cacheEntries
+    val before = cleanBaseline
     var counts = (0L, 0L)
     val stages = stagesOf {
       counts = SalesEtl.runPipeline(spark, fixture, out.toString)
@@ -237,7 +245,7 @@ class SalesEtlSharedFrameSpec extends org.scalatest.funsuite.AnyFunSuite {
     // a copy of its own, so no other spec's cache entry matches its plan
     val input = out.resolve("sales.csv")
     java.nio.file.Files.copy(java.nio.file.Paths.get(fixture), input)
-    val before = cacheEntries
+    val before = cleanBaseline
     intercept[Exception] {
       SalesEtl.runPipeline(spark, input.toString, s"$out/out",
         sink = SalesEtl.Sink("no_such_format"))
