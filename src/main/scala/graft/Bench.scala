@@ -24,6 +24,10 @@ import graft.plans.Barrier
   * query must not read as a fast pass in bench telemetry. A query that
   * fails some passes but succeeds others reports the median of its
   * successes (transient host noise, not an engine failure).
+  *
+  * The session is [[Session]]'s: `SPARK_GRAFT_CPUS` cores plus the
+  * `SPARK_GRAFT_CONF` overrides, so `graft.materialize=reliable` runs
+  * the cluster barrier mode into `SPARK_GRAFT_CKPT_DIR`.
   */
 object Bench {
 
@@ -68,14 +72,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.defaultCores
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(cpus)
     val timeoutSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_TIMEOUT_SEC", "120").toInt.max(1)
     // Machine-checkable quietness (r11 verdict ask #7): "quiet" was a
@@ -210,12 +209,6 @@ object Bench {
         // even against the promoted pointer; the `host` block below
         // records the load evidence to check first.
         "SPARK_GRAFT_BENCH_CANONICAL_REF", "bench/canonical_quiet.json"))}""""
-    // `cpus` is the raw SPARK_GRAFT_CPUS env string; "*" is legal for
-    // local[*] but would be malformed bare in JSON — emit the resolved
-    // processor count instead when the string isn't a plain integer.
-    val cpusJson =
-      if (cpus.matches("\\d+")) cpus
-      else Runtime.getRuntime.availableProcessors.toString
     // Paired-promotion protocol (r13 verdict ask #5): every artifact
     // carries, IN-BAND, (a) the git HEAD it was built from — so a
     // promoted canonical is checkably generated at the round's final
@@ -268,7 +261,7 @@ object Bench {
     } catch { case _: Throwable => """"canonical_pair":null""" }
     val host = s""""host":{"load1_start":${loadStart._1},"load5_start":${loadStart._2},""" +
       s""""load1_end":${procField("/proc/loadavg", 0)},"load5_end":${procField("/proc/loadavg", 1)},""" +
-      s""""uptime_secs":${procField("/proc/uptime", 0)},"cpus":$cpusJson}"""
+      s""""uptime_secs":${procField("/proc/uptime", 0)},"cpus":$cpus}"""
     val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","passes":$passes,"canonical":$canonical$canonicalRef,"git_head":"${esc(gitHead)}",$pairJson,$host,"queries":$qs,"streaming":$streaming,"stddev":$sd,"errors":$es2,"sf":"$sfDir"}"""
     // The driver captures a bounded tail of stdout; the per-query dicts
     // over 148+ queries overflow it, truncating the JSON mid-object.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,22 +12,7 @@ object Verify {
         val ps = p.split(',').toSeq; n => ps.exists(graft.tools.DevArgs.selects(_, n))
       case None => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // Dev-loop conf overrides, e.g. the scale protocol's
-    // SPARK_GRAFT_CONF="graft.materialize=reliable;
-    // spark.executor.heartbeatInterval=60s". Applied on the BUILDER so
-    // context-init confs (heartbeats, network timeouts) take effect too.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.trim.nonEmpty)
-      .map(graft.tools.DevArgs.conf).foreach { case (k, v) => builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      sys.env.getOrElse("SPARK_GRAFT_CKPT_DIR", "/tmp/graft_ckpt"))
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

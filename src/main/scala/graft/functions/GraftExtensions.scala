@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 
 /** SparkSessionExtensions hook exposing graft's native expressions to
   * SQL (`spark.sql("SELECT graft_poly_hash(text) ...")`) — register via
-  *   SparkSession.builder.withExtensions(new GraftExtensions)
+  *   graft.Session.builder().withExtensions(new GraftExtensions)
   * or `spark.sql.extensions=graft.functions.GraftExtensions`.
   * For a session someone ELSE already built (a notebook, the driver's
   * harness), [[GraftExtensions.registerInto]] installs the same

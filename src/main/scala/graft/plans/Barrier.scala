@@ -63,7 +63,7 @@ object Barrier {
     * so a later job that needs a dropped one fails instead of
     * recomputing it. */
   def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case r: LogicalRDD => quietRelease; r.rdd.unpersist(blocking = false)
     case _ =>
   }
 
@@ -71,7 +71,34 @@ object Barrier {
     * persisted RDD, barrier blocks included (`clearCache` alone leaves
     * those). Safe once no frame of the finished query is read again. */
   def releaseAll(spark: SparkSession, blocking: Boolean = false): Unit = {
+    quietRelease
     spark.sharedState.cacheManager.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking))
+  }
+
+  /** Spark WARNs `RDD N was locally checkpointed, its lineage has been
+    * truncated and cannot be recomputed after unpersisting` for every
+    * `local` barrier RDD dropped above: 412 of a tier-1 run's 7801 WARN
+    * lines, all expected, since dropping those blocks is the point of a
+    * release. This drops that one message, matched on its text, at the
+    * root logger's config; every other message of every logger, RDD
+    * classes included, still logs at its level. There, not on the whole
+    * configuration, the filter sees only events that passed the level
+    * check: a configuration-wide filter runs on every log call at every
+    * level and formats each parameterized DEBUG message to match it
+    * (measured: +26 % `query_neardup` peak RSS). Installed once, on the
+    * first release. */
+  private lazy val quietRelease: Unit = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{Filter, LoggerContext}
+    import org.apache.logging.log4j.core.filter.RegexFilter
+    LogManager.getContext(false) match {
+      case ctx: LoggerContext =>
+        ctx.getConfiguration.getRootLogger.addFilter(RegexFilter.createFilter(
+          "RDD \\d+ was locally checkpointed, its lineage has been truncated .*",
+          Array.empty[String], false, Filter.Result.DENY, Filter.Result.NEUTRAL))
+        ctx.updateLoggers()
+      case _ => // another logging backend: nothing to filter
+    }
   }
 }

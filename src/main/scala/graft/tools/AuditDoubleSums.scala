@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
 import org.apache.spark.sql.types.{DoubleType, FloatType}
@@ -19,14 +18,7 @@ import org.apache.spark.sql.types.{DoubleType, FloatType}
 object AuditDoubleSums {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.setCheckpointDir("/tmp/graft_audit_ckpt")
+    val spark = graft.Session()
     val rows = scala.collection.mutable.ArrayBuffer[(String, String)]()
     for ((name, fn) <- graft.SparkEntry.queries.toSeq.sortBy(_._1)) {
       try {

@@ -1,6 +1,6 @@
 package graft.tools
 
-/** Arguments shared by the dev mains (Verify, ExplainSome, StageTime, TimeQueries). */
+/** Arguments shared by [[graft.Session]]'s overrides, Verify and Inspect. */
 object DevArgs {
   /** One `k=v` conf override; anything else is an error naming the argument. */
   def conf(kv: String): (String, String) = kv.split("=", 2) match {

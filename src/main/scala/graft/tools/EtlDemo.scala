@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the sales ETL pipeline — the Spark-native equivalent of
   * `python dataflow_transform.py --input … --output …`
   * (reference: dataflow/dataflow_transform.py:135-143).
@@ -11,14 +9,9 @@ import org.apache.spark.sql.SparkSession
 object EtlDemo {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: EtlDemo <input.csv> <outDir>")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-etl")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // SPARK_MASTER: a deployment's master URL in place of local mode
+    val spark = graft.Session(overrides = graft.Session.envOverrides ++
+      sys.env.get("SPARK_MASTER").map("spark.master=" + _))
     try {
       val res = graft.analytics.SalesPipeline.run(spark, args(0), args(1))
       println(s"[etl] clean=${res.cleanRows} errors=${res.errorRows}")

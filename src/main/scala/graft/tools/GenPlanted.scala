@@ -47,12 +47,7 @@ object GenPlanted extends Serializable {
     val out = args.lift(0).getOrElse("/tmp/planted200k")
     val n = args.lift(1).map(_.toInt).getOrElse(200000)
     val mode = args.lift(2).getOrElse("clusters")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     build(spark, out, n, mode)
     spark.stop()
   }

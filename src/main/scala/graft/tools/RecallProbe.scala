@@ -35,10 +35,7 @@ object RecallProbe {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     families(spark, dir).foreach { case (name, df) =>
       println(f"$name%-18s recall@${VectorOps.KLsh} = ${recallAt(spark, dir, df)}%.3f")
     }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: the 100× FAMILY protocol — the extension of the
@@ -77,15 +77,8 @@ object Scale100xFamilies {
     val fams   = args.lift(3)
       .getOrElse("dedup,simhash,ann,multimodal,text,streaming,curation")
       .split(',').map(_.trim).toSet
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir("/tmp/fam100x_ckpt")
+    val spark = graft.Session(
+      overrides = "spark.sql.shuffle.partitions=64" +: graft.Session.envOverrides)
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: the 100× GRAPH protocol (round-10 verdict task 7) — the
@@ -28,25 +27,18 @@ object Scale100xGraph {
   def main(args: Array[String]): Unit = {
     val src  = args.lift(0).getOrElse("/tmp/sf100organic")
     val work = args.lift(1).getOrElse("/tmp/graph100x")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "128")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+    val spark = graft.Session(overrides = Seq(
+      "spark.sql.shuffle.partitions=128",
+      "spark.sql.adaptive.skewJoin.enabled=true",
       // the FACTOR (×2 median) is the real-cluster knob; byte floors
       // scaled to this corpus (the wedge shuffle's hub partition is
       // tens of MB here where production would be GBs)
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4MB")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2MB")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("graft.graph.broadcastEdges", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(s"$work/_ckpt")
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor=2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes=4MB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes=2MB",
+      "spark.sql.adaptive.coalescePartitions.enabled=false",
+      "spark.sql.autoBroadcastJoinThreshold=-1",
+      "graft.graph.broadcastEdges=false") ++ graft.Session.envOverrides)
 
     // protocol dir = symlinks to the 100x tables + the hub-planted
     // lineitem written fresh; cleared first so re-runs don't trip on

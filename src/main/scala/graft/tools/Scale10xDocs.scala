@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: derive the 10× DOCUMENT/EMBEDDING corpus for the PERF.md
@@ -26,13 +25,7 @@ object Scale10xDocs {
     val src  = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out  = args.lift(1).getOrElse("/tmp/sf1ish_docs")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
                   "orders", "lineitem"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: derive the 10× RELATIONAL/EVENT corpus for the PERF.md
@@ -45,13 +45,7 @@ object Scale10xRel {
     val src  = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out  = args.lift(1).getOrElse("/tmp/sf1ish_rel")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     def replicate(df: DataFrame, shiftCols: Seq[String]): DataFrame =
       Scale10xRel.replicate(df, shiftCols, reps)

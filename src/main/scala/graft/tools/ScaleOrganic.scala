@@ -58,13 +58,7 @@ object ScaleOrganic {
     val src  = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out  = args.lift(1).getOrElse("/tmp/sf1organic")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     build(spark, src, out, reps)
     spark.stop()
   }

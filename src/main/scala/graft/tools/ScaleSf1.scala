@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: derive the WHOLE-SUITE sf1 corpus — every table ×10 from
@@ -51,13 +50,7 @@ object ScaleSf1 {
     val src  = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out  = args.lift(1).getOrElse("/tmp/sf1")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     for (t <- Seq("region", "nation", "customer", "supplier", "part"))
       writeSingle(spark.read.parquet(s"$src/$t.parquet"), out, t)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.streaming.EventsStream
 
 /** Dev-only: drain the stateful-streaming family under the default
@@ -17,13 +16,7 @@ object StreamStateBench {
 
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val targets: Seq[(String, String, () => org.apache.spark.sql.DataFrame)] = Seq(
       ("q47_userstats", "update",
         () => EventsStream.userStats(EventsStream.source(spark, dir))),

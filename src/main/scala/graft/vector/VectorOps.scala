@@ -865,19 +865,6 @@ object VectorOps {
   /** Fixed entry node for the beam search: the first non-query vector. */
   val NswEntry: Int = QueryMax
 
-  /** Dev telemetry: rounds actually executed by the last [[nswBuild]]
-    * and the last beam walk ON THIS THREAD — the early-exit evidence
-    * the scale protocols record alongside recall. Thread-local (r13
-    * ADVICE #2): a concurrent query on another thread can no longer
-    * clobber the counts a probe is about to read; a probe reads the
-    * rounds of the build/walk IT just ran. */
-  private val buildRoundsTl = ThreadLocal.withInitial[Integer](() => 0)
-  private val walkRoundsTl  = ThreadLocal.withInitial[Integer](() => 0)
-  private[graft] def lastBuildRoundsRun: Int = buildRoundsTl.get()
-  private[graft] def lastBuildRoundsRun_=(v: Int): Unit = buildRoundsTl.set(v)
-  private[graft] def lastWalkRoundsRun: Int = walkRoundsTl.get()
-  private[graft] def lastWalkRoundsRun_=(v: Int): Unit = walkRoundsTl.set(v)
-
   /** Graph ANN — the retrieval path for cluster-fragmenting geometry
     * where any IVF's recall/probe trade is poor (measured on the
     * organic corpus: trained IVF recall@3 0.633 at nProbe=4; see
@@ -939,9 +926,7 @@ object VectorOps {
     var prevEdges: DataFrame = null
     var prevFp: (Long, Long) = null
     var converged = false
-    lastBuildRoundsRun = 0
     for (_ <- 1 to buildRounds if !converged) {
-      lastBuildRoundsRun += 1
       val sym = nswSymCapped(edges)
       val twoHop = sym.as("a").join(sym.as("b"), col("a.dst") === col("b.src"))
         .select(col("a.src").as("src"), col("b.dst").as("dst"))
@@ -1074,9 +1059,7 @@ object VectorOps {
     // later round is a no-op; exit ≡ full unroll, oracle in lockstep).
     var prevBeam: Set[(Long, Long)] = null
     var walkDone = false
-    lastWalkRoundsRun = 0
     for (_ <- 1 to searchRounds if !walkDone) {
-      lastWalkRoundsRun += 1
       // the beam is bounded (|queries|×beam rows) at ANY corpus size,
       // so broadcasting it is the scale-correct plan: each round scans
       // g / e once with a broadcast probe instead of shuffling them
@@ -1186,9 +1169,7 @@ object VectorOps {
     // Determinism: the union of per-source results is order-free.
     var edges: Set[(Long, Long)] = init.toSet
     var converged = false
-    lastBuildRoundsRun = 0
     for (_ <- 1 to buildRounds if !converged) {
-      lastBuildRoundsRun += 1
       val sym = symCapped(edges)
       val out = sym.groupBy(_._1).map { case (s, es) => s -> es.map(_._2).toArray }
       val srcs = out.keys.toArray
@@ -1217,15 +1198,12 @@ object VectorOps {
     val gOut = g.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
     val queries = ids.filter(_ < QueryMax)
     val results = mutable.ArrayBuffer.empty[(Long, Long, Double, Int)]
-    var maxWalk = 0
     queries.foreach { qid =>
       val qi = idxOf(qid)
       var beamSet: Seq[(Long, Double)] = Seq((NswEntry.toLong, Double.NaN))
       var scoredOnce = false
       var done = false
-      var rounds = 0
       for (_ <- 1 to searchRounds if !done) {
-        rounds += 1
         val candNodes = mutable.HashSet.empty[Long]
         beamSet.foreach { case (node, _) =>
           candNodes += node
@@ -1240,12 +1218,10 @@ object VectorOps {
         beamSet = next
         scoredOnce = true
       }
-      maxWalk = math.max(maxWalk, rounds)
       topBy(beamSet, KLsh).zipWithIndex.foreach { case ((node, cos), r) =>
         results += ((qid, node, cos, r + 1))
       }
     }
-    lastWalkRoundsRun = maxWalk
     import spark.implicits._
     results.toSeq.toDF("query_id", "neighbor_id", "cos_sim", "rank")
   }
@@ -1453,11 +1429,6 @@ object VectorOps {
     val t = s"((($e) * 131071) % 999983)"
     s"($t * $t % 999983 + $t)"
   }
-
-  private[graft] def devRouterLowBase(spark: SparkSession, dir: String): DataFrame =
-    routerLowBase(spark, dir)
-  private[graft] def devRouterClusterBase(spark: SparkSession, dir: String): DataFrame =
-    routerClusterBase(spark, dir)
 
   private def routerClusterBase(spark: SparkSession, dir: String): DataFrame = {
     val c = col("vec_id") % 10

@@ -15,15 +15,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     graft.etl.SparkTestSession.get
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    graft.Session.start(graft.Session.builder(cores = 4, overrides = Nil)
+      .withExtensions(new GraftExtensions))
   }
 
   test("registerInto installs the SQL surface on a session built WITHOUT extensions") {

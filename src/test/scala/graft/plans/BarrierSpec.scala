@@ -86,6 +86,53 @@ class BarrierSpec extends AnyFunSuite {
     }
   }
 
+  /** WARN-and-above lines logged while `body` runs, as `logger: message`. */
+  private def warnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-barrier-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    app.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(app, Level.WARN, null)
+    ctx.updateLoggers()
+    try body finally {
+      root.removeAppender(app.getName)
+      ctx.updateLoggers()
+    }
+    lines.toArray(Array.empty[String]).toSeq
+  }
+
+  test("releasing local barriers logs no 'locally checkpointed' WARN; other WARNs still log") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.row_number
+    val sc = spark.sparkContext
+    val logged = warnings(withMode("local") {
+      val before = sc.getPersistentRDDs.keySet
+      Barrier.release(Barrier.eager(spark.range(10).toDF("x")))
+      Barrier.eager(spark.range(20).toDF("x"))
+      Barrier.lazily(spark.range(30).toDF("x")).count()
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size === 2 && added.forall(id => sc.getPersistentRDDs(id).isCheckpointed))
+      Barrier.releaseAll(spark, blocking = true)
+      // a Spark WARN from another logger, and one from an RDD class
+      spark.range(3).withColumn("r", row_number().over(Window.orderBy("id"))).collect()
+      org.apache.logging.log4j.LogManager.getLogger("org.apache.spark.rdd.MapPartitionsRDD")
+        .warn("graft-barrier-spec: another RDD warning")
+    })
+    assert(!logged.exists(_.contains("was locally checkpointed")), logged.mkString("\n"))
+    assert(logged.exists(l => l.contains("WindowExec") && l.contains("No Partition Defined")),
+      logged.mkString("\n"))
+    assert(logged.contains("org.apache.spark.rdd.MapPartitionsRDD: graft-barrier-spec: another RDD warning"),
+      logged.mkString("\n"))
+  }
+
   test("only Barrier checkpoints, and the retired confs are gone from src/") {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._

@@ -15,7 +15,7 @@ object PlanShape {
 
   def shape(spark: SparkSession, dir: String): Seq[(String, Seq[Int])] =
     graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      // streaming queries execute on construction (ExplainAll convention)
+      // streaming queries execute on construction (Inspect skips them too)
       // and their batch twins already gate the shared stage plans
       if (name.contains("_stream_")) None
       else {

@@ -11,5 +11,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-32g} -Xms${SPARK_DRIVER_MEM:-32g} -XX:+UseParallelGC \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
